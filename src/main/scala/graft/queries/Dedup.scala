@@ -188,10 +188,9 @@ object Dedup {
     // all the work (the q54 skew shape). Salt the join for coarse
     // geometries: the probe side gets hash(vec_id) % S, the build side
     // replicates ×S — same pair set, S× the parallelism. Production
-    // geometries already have bucket-count ≫ cores, so they default to
-    // S = 1 and their plan is byte-identical to before.
-    val saltN = math.max(1, s.conf.getOption("graft.dedup.pairJoinSalt")
-      .map(_.toInt).getOrElse(if (bits == 0) 32 else 1))
+    // geometries already have bucket-count ≫ cores, so they get S = 1 and
+    // their plan is byte-identical to before.
+    val saltN = if (bits == 0) 32 else 1
     val aSide = guarded.withColumn("__salt",
       if (saltN == 1) lit(0) else pmod(hash(col("vec_id")), lit(saltN)))
     val bSide =
@@ -310,18 +309,13 @@ object Dedup {
     * floor reproduces the old 50 exactly, so verify-SF hashes are
     * unchanged. Integer arithmetic on purpose — (n+99) DIV 100, mirrored
     * verbatim in the oracles — because ceil(0.01·n) in binary floating
-    * point rounds up to 51·10ᵏ⁻² at exact powers of ten. A conf override
-    * (`graft.dedup.d5DfCap` / `d16DfCap`) still pins a static cap, and
-    * the cap rides the plan as a broadcast scalar (t9's corpus-N pattern)
-    * so no extra driver action runs. */
-  private def dfCapFrame(s: SparkSession, d: String, confKey: String): DataFrame =
-    s.conf.getOption(confKey).map(_.toInt) match {
-      case Some(v) => s.range(1).select(lit(v).cast("int").as("df_cap"))
-      case None =>
-        Tables.parallelized(Tables.validDocuments(s, d))
-          .agg(count(lit(1)).as("n_docs"))
-          .select(greatest(lit(50L), expr("(n_docs + 99) DIV 100")).cast("int").as("df_cap"))
-    }
+    * point rounds up to 51·10ᵏ⁻² at exact powers of ten. The cap rides
+    * the plan as a broadcast scalar (t9's corpus-N pattern) so no extra
+    * driver action runs. */
+  private def dfCapFrame(s: SparkSession, d: String): DataFrame =
+    Tables.parallelized(Tables.validDocuments(s, d))
+      .agg(count(lit(1)).as("n_docs"))
+      .select(greatest(lit(50L), expr("(n_docs + 99) DIV 100")).cast("int").as("df_cap"))
 
   /** The d5/d13 inverted index: per-shingle doc lists under the fractional
     * DF cap, with a CANDIDATE-VOLUME GUARD (the d6/d7 idiom, r11) in front
@@ -382,19 +376,16 @@ object Dedup {
     // 34% faster (2.40 → 1.59 s). Past the threshold the production
     // answer to re-shingling is the provisioned `graft.dedup.shingleDir`
     // table, not an in-memory checkpoint. Threshold on the compressed
-    // documents bytes (the parallelized() probe), conf
-    // `graft.dedup.postingsCheckpointMaxBytes`, default 4 MB (sf0.1's
-    // 0.6 MB ✓, sf1's 6 MB ✗ — both measured above).
+    // documents bytes (the parallelized() probe): 4 MB (sf0.1's 0.6 MB ✓,
+    // sf1's 6 MB ✗ — both measured above).
     val postings0 = withShingles(s, d)
       .select(struct(col("doc_id"),
           size(col("shingles")).cast("bigint").as("n_sh")).as("doc"),
         explode(col("shingles")).as("sh"))
       .groupBy(col("sh"))
       .agg(collect_list(col("doc")).as("ds"))
-      .crossJoin(broadcast(dfCapFrame(s, d, "graft.dedup.d5DfCap")))
+      .crossJoin(broadcast(dfCapFrame(s, d)))
       .filter(size(col("ds")).between(2, col("df_cap")))
-    val ckptMax = s.conf.getOption("graft.dedup.postingsCheckpointMaxBytes")
-      .map(_.toLong).getOrElse(4L << 20)
     val docBytes = {
       val files = Tables.validDocuments(s, d).inputFiles
       val hconf = s.sparkContext.hadoopConfiguration
@@ -404,7 +395,7 @@ object Dedup {
       }.sum
     }
     val postings =
-      if (docBytes < ckptMax) postings0.localCheckpoint(true) else postings0
+      if (docBytes < (4L << 20)) postings0.localCheckpoint(true) else postings0
     val est = postings.agg(sum(expr(
       "CAST(size(ds) AS DECIMAL(38,0)) * CAST(size(ds) - 1 AS DECIMAL(38,0)) / 2"))
       .as("__cand"))
@@ -417,7 +408,7 @@ object Dedup {
           "is quadratic on this corpus density -- use d3_dedup_minhash/d10 " +
           "or the banded d5_scale/d9_scale/d17_scale twins (bounded " +
           "candidates, the production path) at this scale, or raise the " +
-          "caps / lower graft.dedup.d5DfCap explicitly",
+          "caps explicitly",
         col("__cand"), col("df_cap"), lit(maxCand),
         round(col("__cand") / pairsPerSec).cast("bigint"),
         lit(pairsPerSec.toLong), lit(budgetSec)))).isNull)
@@ -431,17 +422,12 @@ object Dedup {
     * cluster_size window + global sort, which d17 discards). Returns the
     * checkpointed (doc_id, cluster_id) fixpoint — each round is already
     * an eager localCheckpoint, so the caller composes on O(1)-deep
-    * lineage. Algorithm + scale notes at the d9 entry. */
-  private def convergedLabels(s: SparkSession, d: String,
-      srcOverride: Option[String] = None): DataFrame = {
-    // graft.dedup.pairSource (r11): past d5's candidate-volume wall the
-    // pair graph comes from d5_scale (banded candidates, identical output
-    // on corpora where banding recall is 1.0 — the gate-pinned regime), so
-    // d9/d17 keep working at sf10+ by conf instead of dying with d5.
-    // r12: d9_scale/d17_scale pass the source EXPLICITLY (first-class
-    // oracled entries for the composition, not just a conf knob).
-    val src = srcOverride.getOrElse(
-      s.conf.get("graft.dedup.pairSource", "d5_ngram_jaccard"))
+    * lineage. Algorithm + scale notes at the d9 entry. `src` names the
+    * pair-graph query: d5_ngram_jaccard for d9/d17, and d5_scale (banded
+    * candidates, identical output where banding recall is 1.0 — the
+    * gate-pinned regime) for d9_scale/d17_scale, which keep working at
+    * sf10+ past d5's candidate-volume wall. */
+  private def convergedLabels(s: SparkSession, d: String, src: String): DataFrame = {
     // Mirror INSIDE the one checkpointed pass (r17, §1.2): the former
     // pairs-checkpoint + union(mirror)-checkpoint pair materialized the
     // edge set twice (two jobs, the pair set written once as pairs and
@@ -755,8 +741,8 @@ object Dedup {
     //
     // RESULT CONTRACT (the cap is part of the operator's definition): the
     // measure is Jaccard over the DF ≤ cap shingle vocabulary (n_sh stays
-    // the FULL set size), cap configurable via `graft.dedup.d5DfCap`
-    // (default 50). It equals the uncapped Jaccard exactly when no
+    // the FULL set size), cap greatest(50, (n_docs+99) DIV 100) (see
+    // dfCapFrame). It equals the uncapped Jaccard exactly when no
     // qualifying pair depends solely on blocked shingles — true on this
     // corpus (every J ≥ 0.3 pair shares a shingle of DF ≤ 10; max DF 25,
     // measured at sf0.1 ⇒ bit-identical to the uncapped oracle), but a
@@ -801,8 +787,7 @@ object Dedup {
     // slack for a p² → p⁴ occupancy cut: measured 3.95e6 candidates at
     // sf100 density (58.9 s, guard-green), recall floor ≈ 1 − 1.6e-7 at the
     // J ≈ 0.889 where this family's qualifying pairs sit (DedupSpec pins
-    // banded == exact at verify SF and the derivation itself). Conf:
-    // `graft.dedup.d5ScaleThreshold` / `d5ScaleRecall`.
+    // banded == exact at verify SF and the derivation itself).
     //
     // Like d3/d16_scale, the oracle is the exact (uncapped) SQL: banding
     // recall is 1.0 on the gate corpora, and semantics are FULL-vocabulary
@@ -810,14 +795,9 @@ object Dedup {
     // fan-out to bound (d16_scale's argument). The banded sets are
     // localCheckpointed once (q58's rule): three consumers — bucket
     // join, both set rejoins — must not re-shingle the corpus.
-    // d9/d17 compose with this at scale via graft.dedup.pairSource, or
-    // first-class as d9_scale/d17_scale below.
+    // d9/d17 compose with this at scale as d9_scale/d17_scale below.
     "d5_scale" -> { (s, d) =>
-      val theta = s.conf.getOption("graft.dedup.d5ScaleThreshold")
-        .map(_.toDouble).getOrElse(0.85)
-      val target = s.conf.getOption("graft.dedup.d5ScaleRecall")
-        .map(_.toDouble).getOrElse(0.99999)
-      val (nb, nr) = d5ScaleGeometry(theta, target)
+      val (nb, nr) = d5ScaleGeometry(0.85, 0.99999)
       val sets = bandedSets(s, d, lit(true), bands = nb, numHashes = nb * nr)
         .localCheckpoint(true)
       val buckets = sets.select(col("doc_id"),
@@ -954,17 +934,15 @@ object Dedup {
     // RDD is unreachable (Dataset.unpersist does not apply to RDD-level
     // checkpoints), so steady-state memory is one edge set + two label
     // snapshots.
-    "d9_dup_clusters" -> { (s, d) => d9Presentation(convergedLabels(s, d)) },
+    "d9_dup_clusters" -> { (s, d) => d9Presentation(convergedLabels(s, d, "d5_ngram_jaccard")) },
     // d9's 100 TB composition as a FIRST-CLASS entry (r12): the pair graph
     // comes from d5_scale's collision-bounded banded candidates instead of
     // d5's Θ(n²) exact postings enumeration — the exact family is
     // guard-walled at sf10 density while this runs (BENCHNOTES). Oracled
     // with d9's closure SQL over the UNCAPPED pair set (d5_scale's
     // contract): banded == exact on the gate corpora, so the composed
-    // pipeline rides the same recursive-CTE oracle. The conf knob
-    // `graft.dedup.pairSource` still retargets plain d9; this entry pins
-    // the composition driver-visibly.
-    "d9_scale" -> { (s, d) => d9Presentation(convergedLabels(s, d, Some("d5_scale"))) },
+    // pipeline rides the same recursive-CTE oracle.
+    "d9_scale" -> { (s, d) => d9Presentation(convergedLabels(s, d, "d5_scale")) },
     // INCREMENTAL dedup: an incoming batch (here: every 5th doc_id, the
     // same bounded-query-set convention as s1) checked against the
     // existing corpus — the shape of continuous ingestion, where re-running
@@ -1092,16 +1070,15 @@ object Dedup {
     // keys on, computed by the codegen'd rolling_min_hash Expression
     // (O(text) per doc, narrow). One groupBy(fp) shuffle of (fp, doc_id)
     // pairs; pair expansion is bounded by the same DF-cap pattern as d5
-    // (`graft.dedup.d14FpCap`, default 50) so a boilerplate substring
-    // shared by a million docs can never go quadratic.
+    // (a fixed cap of 50, mirrored in the oracle) so a boilerplate
+    // substring shared by a million docs can never go quadratic.
     "d14_winnow_pairs" -> { (s, d) =>
       import graft.functions.RollingHashFunctions.rolling_min_hash
-      val FP_CAP = s.conf.getOption("graft.dedup.d14FpCap").map(_.toInt).getOrElse(50)
       val fps = Tables.validDocuments(s, d)
         .select(col("doc_id"), rolling_min_hash(col("text"), 32).as("fp"))
       fps.groupBy(col("fp"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")).between(2, FP_CAP))
+        .filter(size(col("ds")).between(2, 50))
         .select(col("fp"), explode(col("ds")).as("doc_a"), col("ds"))
         .select(col("fp"), col("doc_a"), explode(col("ds")).as("doc_b"))
         .filter(col("doc_a") < col("doc_b"))
@@ -1196,7 +1173,7 @@ object Dedup {
     // RESULT CONTRACT (mirrors d5): the measure is source overlap over the
     // doc-DF ≤ cap shingle vocabulary — sizes, intersections, and Jaccard
     // all restricted to it, and every row names its bound in `df_cap`
-    // (conf `graft.dedup.d16DfCap`, default 50 = d5's). On this corpus the
+    // (d5's cap, from the same dfCapFrame). On this corpus the
     // capped result equals the uncapped one (max doc-DF 25 at sf0.1), but
     // at other DF distributions the cap intentionally tightens the
     // estimate toward discriminative overlap — re-measure per corpus
@@ -1204,7 +1181,7 @@ object Dedup {
     // sharing zero capped shingles have no row.
     "d16_source_overlap" -> { (s, d) =>
       import s.implicits._
-      val cap = dfCapFrame(s, d, "graft.dedup.d16DfCap")
+      val cap = dfCapFrame(s, d)
       val postings = Tables.parallelized(Tables.validDocuments(s, d))
         .select(col("source"), col("text")).as[(String, String)]
         .mapPartitions(_.map { case (src, t) => (src, shinglesOf(t)) })
@@ -1293,10 +1270,11 @@ object Dedup {
     // checkpointed fixpoint feeds the join without d9's cluster_size window
     // + global sort, which this query never reads — d17's cost is d9's core
     // plus a cluster-sized argmax, not d9's presentation layer too.
-    "d17_survivorship" -> { (s, d) => d17Presentation(s, d, convergedLabels(s, d)) },
+    "d17_survivorship" -> { (s, d) =>
+      d17Presentation(s, d, convergedLabels(s, d, "d5_ngram_jaccard")) },
     // d17's scale composition, first-class like d9_scale (same pair
     // source, same oracle argument).
-    "d17_scale" -> { (s, d) => d17Presentation(s, d, convergedLabels(s, d, Some("d5_scale"))) },
+    "d17_scale" -> { (s, d) => d17Presentation(s, d, convergedLabels(s, d, "d5_scale")) },
     // MinHash ESTIMATOR calibration — the acceptance audit you run before
     // trusting a K-component signature family (d3/d10/d5_scale geometry)
     // on a new corpus: over all pairs of a FIXED-SIZE deterministic doc
@@ -1819,9 +1797,8 @@ object Dedup {
   // definition of the inverted index, the cap, and the ordered-pair CTE,
   // so the d5 contract (shingle set, DF cap, Jaccard arithmetic,
   // threshold) cannot silently drift apart from the operators built on
-  // top of it. NOTE: like every oracle here, these pin the DEFAULT config
-  // (the fractional cap, J ≥ 0.3) — a caller overriding the conf changes
-  // the Spark result by design, and no static SQL twin can follow it.
+  // top of it. The fractional cap and J ≥ 0.3 are constants on both
+  // sides, so no session conf can move the operator off its oracle.
   private[queries] val INV_CTE =
     "inv AS (SELECT doc_id, CAST(len(shingles) AS BIGINT) AS n, unnest(shingles) AS sh FROM sh_docs)"
   // r11: the DF cap is mirrored in the oracle (the d16 r10 precedent,

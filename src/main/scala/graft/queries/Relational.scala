@@ -1059,7 +1059,7 @@ object Relational {
     // closes the gap ($1000 band, sf1: join 44.9 s vs frame 9.6 s). This is
     // the answer: a PREFIX-SUMMED HISTOGRAM with edge-bucket correction.
     //   1. Bucket prices on CENTS (exact BIGINT, q53's trick) at width =
-    //      band/K (K = spark.graft.q55.k, default 10) and aggregate one
+    //      band/K (K = 10 at the default $100 band) and aggregate one
     //      (count, decimal sum) per (status, bucket) — one n-row agg into a
     //      DOMAIN-bound table (price-range/width · statuses rows, n-free).
     //   2. Densify + running-total it per status (a Window over the tiny
@@ -1115,21 +1115,11 @@ object Relational {
       // band itself is always a
       // divisor, so a prime-cent band (e.g. $99.73) snaps to K=1, which
       // the four-marker merge handles exactly (interior empty, both edge
-      // buckets fully marker-tested). Setting spark.graft.q55.k overrides
-      // (width = band/K) for experiments.
-      val widthCents = s.conf.getOption("spark.graft.q55.k") match {
-        case Some(k) =>
-          require(k.toInt > 0, s"spark.graft.q55.k must be positive, got $k")
-          val wc = math.max(1L, bandCents / k.toInt)
-          require(bandCents % wc == 0,
-            s"spark.graft.q55.k=$k does not divide the $bandCents-cent band evenly")
-          wc
-        case None =>
-          val divisors = (1L to math.sqrt(bandCents.toDouble).toLong + 1)
-            .filter(bandCents % _ == 0)
-            .flatMap(i => Seq(i, bandCents / i)).distinct
-          divisors.minBy(w => (math.abs(math.log10(w / 1000.0)), -w))
-      }
+      // buckets fully marker-tested).
+      val widthCents = (1L to math.sqrt(bandCents.toDouble).toLong + 1)
+        .filter(bandCents % _ == 0)
+        .flatMap(i => Seq(i, bandCents / i)).distinct
+        .minBy(w => (math.abs(math.log10(w / 1000.0)), -w))
       val kk = bandCents / widthCents
       // Exact FLOOR division for bucketing: `a div b` truncates toward
       // zero, which for negative cents would make bucket 0 span 2w−1
@@ -1186,7 +1176,7 @@ object Relational {
         .filter(when(col("hi") - col("lo") + lit(kk + 1) > maxPrefix,
           raise_error(format_string(
             "q55_scale: status %s needs %s prefix rows > spark.graft.q55.maxPrefixRows=%s; " +
-              "use wider buckets (smaller spark.graft.q55.k), raise the cap, or run q55_num_range_frame",
+              "raise the cap or run q55_num_range_frame",
             col("h_status"), col("hi") - col("lo") + lit(kk + 1), lit(maxPrefix)))).isNull)
         .select(col("h_status").as("p_status"),
           explode(expr(s"sequence(lo - $kk, hi)")).as("p_bkt"))
@@ -1685,7 +1675,7 @@ object Relational {
       def freq(df: DataFrame, key: String): DataFrame =
         df.filter(col(key).isNotNull)
           .groupBy(col(key).as("join_key")).agg(count(lit(1)).as("f"))
-      skewReport(s,
+      skewReport(
         freq(Tables.orders(s, d), "o_orderkey"),
         freq(Tables.lineitem(s, d), "l_orderkey"),
         freq(Tables.events(s, d), "user_id"))
@@ -1714,7 +1704,7 @@ object Relational {
           .agg(hh(col(key)).as("hh"))
           .select(explode(col("hh")).as("e"))
           .select(col("e.key").as("join_key"), col("e.cnt").as("f"))
-      skewReport(s,
+      skewReport(
         sketchFreq(Tables.orders(s, d), "o_orderkey"),
         sketchFreq(Tables.lineitem(s, d), "l_orderkey"),
         sketchFreq(Tables.events(s, d), "user_id"))
@@ -2023,8 +2013,7 @@ object Relational {
     * `(join_key BIGINT, f BIGINT)` — shared code so the exact and sketch
     * forms can never drift (the shardAgg pattern). See q68's entry for the
     * DECIMAL/saturation and checkpoint-vs-reuse rationale. */
-  private def skewReport(s: SparkSession, of: DataFrame, lf: DataFrame,
-      ef: DataFrame): DataFrame = {
+  private def skewReport(of: DataFrame, lf: DataFrame, ef: DataFrame): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(19,0)")
     val ol = of.as("o").join(lf.as("l"), Seq("join_key"))
       .select(col("join_key"), col("o.f").as("f_left"), col("l.f").as("f_right"),
@@ -2036,11 +2025,8 @@ object Relational {
     // sf10 (5.3 vs 6.3 s) but LOSES 34% at sf100 (89 vs 59 s) — the
     // checkpoint write+read grows with the counts table while
     // ReusedExchange amortizes the shuffles, so the join-twice form is
-    // the 100 TB default; `graft.q68.checkpoint=true` restores the old
-    // shape for small-SF iteration.
-    def top(pairsDf0: DataFrame, name: String): DataFrame = {
-      val pairsDf = if (s.conf.getOption("graft.q68.checkpoint").contains("true"))
-        pairsDf0.localCheckpoint(true) else pairsDf0
+    // the 100 TB shape.
+    def top(pairsDf: DataFrame, name: String): DataFrame = {
       val tot = pairsDf.agg(sum(col("pairs_dec")).as("tot"))
       val w = Window.orderBy(col("pairs_dec").desc, col("join_key"))
       pairsDf

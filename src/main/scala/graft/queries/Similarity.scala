@@ -44,6 +44,10 @@ object Similarity {
   private val S19_NPROBE = 8
   private val S19_POOL = 40
   private val SAMPLE = 2000
+  // PQ geometry (s18/s19): PQ_M sub-spaces × PQ_K centroids = PQ_M code
+  // bytes per vector.
+  private val PQ_M = 8
+  private val PQ_K = 16
   private val DRIFT_BITS = 6 // s15 cell = sign bits of the first 6 dims (64 cells)
 
   /** Deterministic ±1 hyperplanes (fixed-seed PRNG, same on every run). */
@@ -963,19 +967,14 @@ object Similarity {
     // true neighbors sit at Hamming 17–25 of 64, near the random mean, so
     // the signature is weakly cosine-informative): 12×5 = recall 0.80 of
     // s17's final top-5 scanning 32% of the cross product; 10×6 = 0.52 @
-    // 14%; 8×8 = 0.22 @ 3% — conf-tunable (`spark.graft.ann.hammingTables
-    // /.hammingBits`), and the honest limit is stated: bucket count is
-    // geometry-fixed, so the cut is a CONSTANT factor on collision mass;
-    // dense corpora should raise bits (fewer, tighter tables), bounded by
-    // the 64-bit signature. The Hamming pool and cosine rerank are s17's
+    // 14%; 8×8 = 0.22 @ 3% — and the honest limit is stated: bucket
+    // count is geometry-fixed, so the cut is a CONSTANT factor on
+    // collision mass; dense corpora should raise bits (fewer, tighter
+    // tables), bounded by the 64-bit signature. The Hamming pool and cosine rerank are s17's
     // verbatim tail (shared [[hammingRerank]]); the 1×0 geometry collapses
     // the pipeline onto s17's exact plan, which is what keeps the shared
     // path hash-oracled while this production row is recall-pinned.
-    "s17_scale" -> { (s, d) =>
-      val t = s.conf.get("spark.graft.ann.hammingTables", "12").toInt
-      val b = s.conf.get("spark.graft.ann.hammingBits", "5").toInt
-      hammingRerank(s, d, t, b, "s17_scale")
-    },
+    "s17_scale" -> ((s, d) => hammingRerank(s, d, 12, 5, "s17_scale")),
     // Product quantization + asymmetric distance computation (Jégou et
     // al. TPAMI'11) — the remaining classic on the bytes-per-vector axis
     // (float s1 → int8 s11/s13 → 1-bit s17 → PQ): the vector space splits
@@ -1254,36 +1253,34 @@ object Similarity {
   /** Shared PQ encode → ADC pool → exact-cosine-rerank pipeline — s18
     * (pool = 20, the production ADC cut) and s18_exhaustive (pool open =
     * every candidate reranked ⇒ collapses to s1) differ ONLY in the pool
-    * bound, so the two can never drift. Geometry via `graft.pq.m` /
-    * `graft.pq.k` (default 8 sub-spaces × 16 centroids = 8 code bytes
-    * per vector on the 64-dim corpus). See the s18 entries for the scale
-    * rationale; determinism: codebooks come from [[trainCentroids]]
-    * (fixed seed, fixed iterations, sequential fold) over per-sub-space
+    * bound, so the two can never drift. Geometry PQ_M × PQ_K (8
+    * sub-spaces × 16 centroids = 8 code bytes per vector on the 64-dim
+    * corpus). See the s18 entries for the scale rationale; determinism:
+    * codebooks come from [[trainCentroids]] (fixed seed, fixed
+    * iterations, sequential fold) over per-sub-space
     * slices of the same first-SAMPLE rows IVF trains on, encode ties
     * break to the lower code (nearestCells), and the ADC sum folds in
     * fixed sub-space order — bit-stable across runs and partitionings. */
   private def pqRerank(s: SparkSession, d: String, pool: Int, op: String): DataFrame = {
     import s.implicits._
     val dim = Tables.embDim(s)
-    val m = s.conf.getOption("graft.pq.m").map(_.toInt).getOrElse(8)
-    val k = s.conf.getOption("graft.pq.k").map(_.toInt).getOrElse(16)
-    require(dim % m == 0, s"$op: dim $dim does not split into $m sub-spaces")
-    val sub = dim / m
+    require(dim % PQ_M == 0, s"$op: dim $dim does not split into $PQ_M sub-spaces")
+    val sub = dim / PQ_M
     val e = normed(s, d)
     val sample = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .orderBy(col("vec_id")).limit(SAMPLE).collect().map(_._2)
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m) { mm =>
+    val books: Array[Array[Array[Double]]] = Array.tabulate(PQ_M) { mm =>
       // ppSeed measured on this corpus (r15): k-means++ does NOT move
       // recall@5 (0.58 vs 0.60 at sf0.01, 0.325 vs 0.335 at sf0.1) — the
       // synthetic embeddings are isotropic, so D²-weighted seeding buys
       // nothing; uniform stays shipped, the capability stays testable.
-      Similarity.trainCentroids(sample.map(_.slice(mm * sub, (mm + 1) * sub)), k,
+      Similarity.trainCentroids(sample.map(_.slice(mm * sub, (mm + 1) * sub)), PQ_K,
         ppSeed = false)
     }
-    // trainCentroids returns min(k, |sample|) centroids; every sub-space
+    // trainCentroids returns min(PQ_K, |sample|) centroids; every sub-space
     // trains on the same sample rows, so all books share one length. The
     // LUT stride and the ADC lookup stride must BOTH be this effective k
-    // (a fixed-$k stride would misindex on a corpus smaller than k).
+    // (a fixed-PQ_K stride would misindex on a corpus smaller than PQ_K).
     require(sample.nonEmpty, s"$op: empty embedding corpus")
     val kEff = books(0).length
     val bc = s.sparkContext.broadcast(books)
@@ -1322,7 +1319,7 @@ object Similarity {
     val byQ = Window.partitionBy(col("q_id"))
     val poolDf = coded.join(broadcast(qLut), col("vec_id") =!= col("q_id"))
       .withColumn("adc", expr(
-        s"aggregate(sequence(0, ${m - 1}), CAST(0 AS DOUBLE), " +
+        s"aggregate(sequence(0, ${PQ_M - 1}), CAST(0 AS DOUBLE), " +
           s"(acc, i) -> acc + element_at(lut, i * $kEff + element_at(codes, i + 1) + 1))"))
       .withColumn("prk",
         row_number().over(byQ.orderBy(col("adc").desc, col("vec_id"))))
@@ -1353,10 +1350,8 @@ object Similarity {
       op: String): DataFrame = {
     import s.implicits._
     val dim = Tables.embDim(s)
-    val m = s.conf.getOption("graft.pq.m").map(_.toInt).getOrElse(8)
-    val k = s.conf.getOption("graft.pq.k").map(_.toInt).getOrElse(16)
-    require(dim % m == 0, s"$op: dim $dim does not split into $m sub-spaces")
-    val sub = dim / m
+    require(dim % PQ_M == 0, s"$op: dim $dim does not split into $PQ_M sub-spaces")
+    val sub = dim / PQ_M
     val e = normed(s, d)
     val sample = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .orderBy(col("vec_id")).limit(SAMPLE).collect().map(_._2)
@@ -1369,10 +1364,10 @@ object Similarity {
       val c = coarse(Similarity.nearestCells(v, coarse, 1)(0))
       Array.tabulate(v.length)(i => (v(i) - c(i)).toFloat)
     }
-    val books = Array.tabulate(m) { mm =>
-      Similarity.trainCentroids(resSample.map(_.slice(mm * sub, (mm + 1) * sub)), k)
+    val books = Array.tabulate(PQ_M) { mm =>
+      Similarity.trainCentroids(resSample.map(_.slice(mm * sub, (mm + 1) * sub)), PQ_K)
     }
-    val kEff = books(0).length // min(k, |sample|) — the LUT/ADC stride
+    val kEff = books(0).length // min(PQ_K, |sample|) — the LUT/ADC stride
     val bcC = s.sparkContext.broadcast(coarse)
     val bcB = s.sparkContext.broadcast(books)
     val coded = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
@@ -1425,7 +1420,7 @@ object Similarity {
     val poolDf = coded.join(broadcast(qProbe), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("adc", col("qdotc") + expr(
-        s"aggregate(sequence(0, ${m - 1}), CAST(0 AS DOUBLE), " +
+        s"aggregate(sequence(0, ${PQ_M - 1}), CAST(0 AS DOUBLE), " +
           s"(acc, i) -> acc + element_at(lut, i * $kEff + element_at(codes, i + 1) + 1))"))
       .withColumn("prk",
         row_number().over(byQ.orderBy(col("adc").desc, col("vec_id"))))

@@ -327,7 +327,7 @@ class DedupSpec extends SparkTestBase {
       "surviving bytes must be exactly the span-cut texts in doc_id order")
   }
 
-  test("d5_scale banded path equals exact d5 where the cap doesn't bite; d9 composes with it") {
+  test("d5_scale banded path equals exact d5 where the cap doesn't bite") {
     // On the test corpus the DF cap never bites, so capped d5 == uncapped
     // exact == d5_scale must hold row-for-row (banding recall 1.0 — the
     // claim that licenses d5_scale's exact-SQL oracle).
@@ -339,16 +339,6 @@ class DedupSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(banded == exact, s"banded ${banded.size} pairs != exact ${exact.size}")
     assert(exact.nonEmpty)
-    // The pair-graph consumers must be source-agnostic: d9 over the banded
-    // pair set equals d9 over the exact one (the sf10+ composition).
-    val d9default = graft.queries.Dedup.queries("d9_dup_clusters")(spark, sf)
-      .collect().map(_.toString).sorted
-    spark.conf.set("graft.dedup.pairSource", "d5_scale")
-    try {
-      val d9banded = graft.queries.Dedup.queries("d9_dup_clusters")(spark, sf)
-        .collect().map(_.toString).sorted
-      assert(d9banded.sameElements(d9default), "d9 must be pair-source-agnostic")
-    } finally spark.conf.unset("graft.dedup.pairSource")
   }
 
   test("d5_scale geometry is threshold-conditioned (d7 playbook, r12)") {

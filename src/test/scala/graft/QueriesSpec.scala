@@ -9,6 +9,27 @@ class QueriesSpec extends SparkTestBase {
     assert(missing.isEmpty, s"oracle entries without a query: $missing")
   }
 
+  // A conf key the README tells operators to set must be one the code
+  // reads; otherwise the README points at a setting nothing honours.
+  // Tokens whose second segment is a package or an object name are code
+  // references (graft.core.SinkConfig, graft.Listen.replay), not keys.
+  test("every graft conf key README.md names is read under src/main/scala") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val main = Paths.get("src/main/scala")
+    val sources = scala.util.Using.resource(Files.walk(main))(_.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).map(Files.readString).mkString("\n"))
+    val packages = scala.util.Using.resource(Files.list(main.resolve("graft")))(
+      _.iterator.asScala.filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet)
+    val named = """(?:spark\.)?graft\.(\w+)(?:\.\w+)+""".r
+      .findAllMatchIn(Files.readString(Paths.get("README.md")))
+      .filterNot(m => packages(m.group(1)) || m.group(1).head.isUpper)
+      .map(_.matched).toSet
+    assert(named.nonEmpty)
+    val unread = named.filterNot(k => sources.contains("\"" + k + "\""))
+    assert(unread.isEmpty, s"README names conf keys that no code reads: $unread")
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
