@@ -58,67 +58,16 @@ object Similarity {
 
   /** Lloyd's k-means on a (small, deterministic) sample — the coarse
     * quantizer for IVF. Fixed seed init, fixed iteration count, sequential
-    * fold order ⇒ identical centroids on every run.
-    *
-    * `ppSeed = true` switches init from a uniform shuffle to k-means++
-    * (Arthur & Vassilvitskii SODA'07): first centroid by seeded draw, each
-    * next proportional to D² against the chosen set — still fully
-    * deterministic (fixed seed, sequential fold). Measured for the PQ
-    * codebooks (s18) and NOT shipped: on this isotropic corpus it does
-    * not move recall@5 (see the pqRerank call site for numbers); kept as
-    * a capability for clustered corpora, where D²-seeding stops uniform
-    * init from wasting centroids on near-duplicates. */
+    * fold order ⇒ identical centroids on every run. */
   private[graft] def trainCentroids(sample: Array[Array[Float]],
-      k: Int = NLIST, iters: Int = 10,
-      ppSeed: Boolean = false): Array[Array[Double]] = {
+      k: Int = NLIST, iters: Int = 10): Array[Array[Double]] = {
     val rnd = new scala.util.Random(7)
     val n = sample.length
     val dim = sample.headOption.map(_.length).getOrElse(0)
     // init from k DISTINCT sample points (duplicates would freeze a dead
     // cell: ties break low, so the twin centroid never receives a point).
-    var cents =
-      if (!ppSeed)
-        rnd.shuffle(sample.indices.toVector).take(math.min(k, n))
-          .map(i => sample(i).map(_.toDouble)).toArray
-      else {
-        val kk = math.min(k, n)
-        val chosen = scala.collection.mutable.ArrayBuffer(rnd.nextInt(n))
-        val d2 = new Array[Double](n)
-        java.util.Arrays.fill(d2, Double.MaxValue)
-        while (chosen.length < kk) {
-          val last = sample(chosen.last)
-          var i = 0
-          while (i < n) {
-            var acc = 0.0
-            var j = 0
-            val lim = math.min(last.length, sample(i).length)
-            while (j < lim) { val df = sample(i)(j) - last(j); acc += df * df; j += 1 }
-            if (acc < d2(i)) d2(i) = acc
-            i += 1
-          }
-          val tot = d2.sum
-          // All-duplicate tail (every remaining point at distance 0):
-          // fall back to the first not-yet-chosen index — deterministic.
-          val next =
-            if (tot <= 0.0) (0 until n).find(i => !chosen.contains(i)).getOrElse(0)
-            else {
-              val r = rnd.nextDouble() * tot
-              // Fallback (r lands past the last positive weight through
-              // float rounding): the last positive-distance point.
-              var acc = 0.0; var i = 0
-              var pick = d2.lastIndexWhere(_ > 0)
-              while (i < n) {
-                acc += d2(i)
-                // d2 > 0 excludes already-chosen points (distance 0), so a
-                // float boundary tie can never duplicate a centroid.
-                if (d2(i) > 0 && acc >= r) { pick = i; i = n } else i += 1
-              }
-              pick
-            }
-          chosen += next
-        }
-        chosen.map(i => sample(i).map(_.toDouble)).toArray
-      }
+    var cents = rnd.shuffle(sample.indices.toVector).take(math.min(k, n))
+      .map(i => sample(i).map(_.toDouble)).toArray
     var it = 0
     while (it < iters) {
       val sums = Array.fill(cents.length, dim)(0.0)
@@ -194,21 +143,95 @@ object Similarity {
     Tables.parallelized(Tables.validEmbeddings(s, d)).select(col("vec_id"), col("label"), col("embedding"),
       vec_dot(col("embedding"), col("embedding")).as("sq"))
 
-  /** The declared every-50th query set, SIZE-GUARDED for broadcast (shared
-    * by s1 and s7): the set is corpus-proportional, so at 100 TB it would
-    * overflow any broadcast threshold — a lazy distributed count joins in
-    * and `raise_error` fails the job with a pointer to the scale paths
-    * (s2/s4) instead of silently OOMing the driver. Cap configurable via
-    * `graft.ann.maxQuerySet`. */
-  private def guardedQuerySet(s: SparkSession, e: DataFrame, op: String): DataFrame =
-    guardedBounded(s,
-      e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-          col("embedding").as("q_emb"), col("sq").as("q_sq")), op)
+  /** The declared every-50th query set of `e`, projected to `cols` and
+    * SIZE-GUARDED for broadcast: the set is corpus-proportional, so at
+    * 100 TB it would overflow any broadcast threshold — a lazy distributed
+    * count joins in and `raise_error` fails the job with a pointer to the
+    * scale paths (s2/s4) instead of silently OOMing the driver. Families
+    * that expand a query into probes guard before the expansion, so the
+    * cap counts queries. Cap configurable via `graft.ann.maxQuerySet`. */
+  private def querySet(s: SparkSession, e: DataFrame, op: String, cols: Column*): DataFrame = {
+    val q0 = e.filter(col("vec_id") % 50 === 0).select(cols: _*)
+    val maxQ = s.conf.getOption("graft.ann.maxQuerySet").map(_.toInt).getOrElse(10000)
+    val qn = q0.agg(count(lit(1)).as("__q_n"))
+    q0.crossJoin(broadcast(qn))
+      .filter(when(col("__q_n") > maxQ, raise_error(format_string(
+        op + ": query set has %s vectors > graft.ann.maxQuerySet=%s; " +
+          "the broadcast exact baseline needs a bounded query set — use " +
+          "s2_knn_lsh or s4_knn_ivf at this scale",
+        col("__q_n"), lit(maxQ)))).isNull)
+      .drop("__q_n")
+  }
 
-  /** The count guard alone, for query frames with non-default projections
-    * (s12 carries quantized columns): lazy distributed count joined in,
-    * `raise_error` when the broadcast side exceeds the cap. */
+  /** The query-side columns every exact-cosine stage reads, then `extra`. */
+  private def qCore(extra: Column*): Seq[Column] =
+    Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("sq").as("q_sq")) ++ extra
+
+  /** Exact float cosine of a query row (`q_emb`, `q_sq`) and a corpus row. */
+  private def cosineCol: Column =
+    dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq")))
+
+  /** Per-query rank by (cosine desc, vec_id) — the total order every
+    * top-k cut uses. */
+  private def cosineRank: Column =
+    row_number().over(Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id")))
+
+  /** The `(q_id, neighbor_id, rk, cosine)` top-[[TOPK]] of scored candidates. */
+  private def topK(cands: DataFrame): DataFrame =
+    cands.withColumn("rk", cosineRank)
+      .filter(col("rk") <= TOPK)
+      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("cosine"))
+      .orderBy(col("q_id"), col("rk"))
+
+  /** s1's exact scan: the guarded query set is broadcast against the
+    * corpus, so the candidate scan is one map-side pass (the corpus never
+    * shuffles) and every (query, other vector) pair gets its cosine. */
+  private def bruteScan(s: SparkSession, d: String, op: String): DataFrame = {
+    val e = normed(s, d)
+    e.join(broadcast(querySet(s, e, op, col("vec_id").as("q_id"), col("label").as("q_label"),
+        col("embedding").as("q_emb"), col("sq").as("q_sq"))), col("vec_id") =!= col("q_id"))
+      .withColumn("cosine", cosineCol)
+  }
+
+  /** The first [[SAMPLE]] vectors of `e` by vec_id: the deterministic
+    * sample every trained quantizer (IVF cells, PQ books) learns from. */
+  private def trainingSample(s: SparkSession, e: DataFrame): Array[Array[Float]] = {
+    import s.implicits._
+    e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .orderBy(col("vec_id")).limit(SAMPLE).collect().map(_._2)
+  }
+
+  /** (vec_id, embedding, sq) rows of `df` tagged with their nearest
+    * centroid's `cell` (ties to the lower cell): one typed narrow map. */
+  private def assignCells(s: SparkSession, df: DataFrame,
+      cents: Array[Array[Double]]): DataFrame = {
+    import s.implicits._
+    val bcC = s.sparkContext.broadcast(cents)
+    df.select(col("vec_id"), col("embedding"), col("sq"))
+      .as[(Long, Array[Float], Double)]
+      .mapPartitions { it =>
+        val cs = bcC.value
+        it.map { case (id, emb, sq) =>
+          (id, emb, sq, Similarity.nearestCells(emb, cs, 1)(0))
+        }
+      }.toDF("vec_id", "embedding", "sq", "cell")
+  }
+
+  /** The tail of the two-stage families (s17, s18/s19): each query's
+    * candidate `pool` (q_id, vec_id, `score`) joins back to the corpus and
+    * the query set by broadcast id joins — vectors never shuffle (s14's
+    * hits-join-back shape) — and the top-[[TOPK]] by exact cosine is kept
+    * with its `score`. */
+  private def rerank(e: DataFrame, q: DataFrame, pool: DataFrame, score: String): DataFrame =
+    e.select(col("vec_id"), col("embedding"), col("sq"))
+      .join(broadcast(pool), "vec_id")
+      .join(broadcast(q.select(col("q_id"), col("q_emb"), col("q_sq"))), "q_id")
+      .withColumn("cosine", cosineCol)
+      .withColumn("rank", cosineRank.cast("int"))
+      .filter(col("rank") <= TOPK)
+      .select(col("q_id"), col("rank"), col("vec_id"), col(score), col("cosine"))
+      .orderBy(col("q_id"), col("rank"))
+
   /** IVF (inverted-file) ANN over float cosine — the second scale path
     * beside sign-LSH: a coarse quantizer (k-means centroids trained on a
     * deterministic sample) partitions the corpus into NLIST cells; each
@@ -221,30 +244,20 @@ object Similarity {
     * exact brute force — s4_exhaustive hash-oracles that regime against
     * s1's SQL; the production nprobe = NPROBE entry is recall-pinned in
     * SimilaritySpec (cell assignment is training-defined, like s2).
-    * The probe set is broadcast, so it rides the same guardedBounded
-    * size guard as s1/s12/s13/s14 (ADVICE r12 class). */
+    * The probe set is broadcast, so it rides the same [[querySet]] size
+    * guard as s1/s12/s13/s14 (ADVICE r12 class). */
   private def ivfKnn(s: SparkSession, d: String, nprobe: Int, op: String): DataFrame = {
     import s.implicits._
     val e = normed(s, d)
-    val cents = Similarity.trainCentroids(
-      e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .orderBy(col("vec_id")).limit(SAMPLE).collect().map(_._2))
+    val cents = Similarity.trainCentroids(trainingSample(s, e))
     val bc = s.sparkContext.broadcast(cents)
-    val assigned = e.select(col("vec_id"), col("embedding"), col("sq"))
-      .as[(Long, Array[Float], Double)]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, emb, sq) => (id, emb, sq, Similarity.nearestCells(emb, cs, 1)(0)) }
-      }
-      .toDF("vec_id", "embedding", "sq", "cell")
+    val assigned = assignCells(s, e, cents)
     // Guard the QUERY set before probe expansion (s1's semantics — the
     // cap counts queries, not probe rows): the expanded broadcast is at
     // most NLIST× the guarded count, a known constant. Guarding after
     // expansion made the exhaustive twin trip at 1/NLIST of s1's query
     // count (caught live at the sf10 bench).
-    val q = guardedBounded(s,
-        e.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id"), col("embedding"), col("sq")), op)
+    val q = querySet(s, e, op, col("vec_id"), col("embedding"), col("sq"))
       .as[(Long, Array[Float], Double)]
       .mapPartitions { it =>
         val cs = bc.value
@@ -256,14 +269,9 @@ object Similarity {
     // No dedup needed (unlike s2): each corpus vector lives in exactly
     // one cell and a query's probe cells are distinct, so a (q, vec)
     // pair can join at most once.
-    val cands = assigned.join(broadcast(q), Seq("cell"))
+    topK(assigned.join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    cands.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TOPK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
+      .withColumn("cosine", cosineCol))
   }
 
   /** IVF × int8 — the production ANN composition at 100 TB: s4's coarse
@@ -287,9 +295,7 @@ object Similarity {
       .withColumn("qvec", sq8(col("embedding"), col("maxabs")))
       .withColumn("qsq", ivec_dot(col("qvec"), col("qvec")))
       .select(col("vec_id"), col("embedding"), col("qvec"), col("qsq"))
-    val cents = Similarity.trainCentroids(
-      e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .orderBy(col("vec_id")).limit(SAMPLE).collect().map(_._2))
+    val cents = Similarity.trainCentroids(trainingSample(s, e))
     val bc = s.sparkContext.broadcast(cents)
     val assigned = e.as[(Long, Array[Float], Array[Int], Long)]
       .mapPartitions { it =>
@@ -303,7 +309,7 @@ object Similarity {
     // cap counts queries; the expanded broadcast is ≤ NLIST× that, a
     // known constant): a corpus-proportional query set must fail fast
     // with the raise_error pointer, not OOM the driver (ADVICE r12).
-    val q = guardedBounded(s, e.filter(col("vec_id") % 50 === 0), op)
+    val q = querySet(s, e, op, col("vec_id"), col("embedding"), col("qvec"), col("qsq"))
       .as[(Long, Array[Float], Array[Int], Long)]
       .mapPartitions { it =>
         val cs = bc.value
@@ -314,29 +320,12 @@ object Similarity {
       .toDF("q_id", "q_qvec", "q_qsq", "cell")
     // One cell per corpus vector + distinct probe cells per query ⇒ a
     // (q, vec) pair joins at most once (s4's no-dedup argument).
-    val cands = assigned.join(broadcast(q), Seq("cell"))
+    topK(assigned.join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("qnorm",
         sqrt(col("q_qsq").cast("double")) * sqrt(col("qsq").cast("double")))
       .withColumn("cosine", when(col("qnorm") =!= 0.0,
-        ivec_dot(col("q_qvec"), col("qvec")).cast("double") / col("qnorm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc_nulls_last, col("vec_id"))
-    cands.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TOPK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
-  }
-
-  private def guardedBounded(s: SparkSession, q0: DataFrame, op: String): DataFrame = {
-    val maxQ = s.conf.getOption("graft.ann.maxQuerySet").map(_.toInt).getOrElse(10000)
-    val qn = q0.agg(count(lit(1)).as("__q_n"))
-    q0.crossJoin(broadcast(qn))
-      .filter(when(col("__q_n") > maxQ, raise_error(format_string(
-        op + ": query set has %s vectors > graft.ann.maxQuerySet=%s; " +
-          "the broadcast exact baseline needs a bounded query set — use " +
-          "s2_knn_lsh or s4_knn_ivf at this scale",
-        col("__q_n"), lit(maxQ)))).isNull)
-      .drop("__q_n")
+        ivec_dot(col("q_qvec"), col("qvec")).cast("double") / col("qnorm"))))
   }
 
   /** Per-label centroid vectors with ORDER-FREE exact arithmetic: each float
@@ -447,19 +436,14 @@ object Similarity {
     val bucketed = coded
       .select(col("vec_id"), col("embedding"), col("sq"),
         posexplode(col("codes")).as(Seq("t", "code")))
-    val q = guardedBounded(s, coded.filter(col("vec_id") % 50 === 0), op)
+    val q = querySet(s, coded, op, col("vec_id"), col("embedding"), col("sq"), col("codes"))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("sq").as("q_sq"), posexplode(col("codes")).as(Seq("q_t", "q_code")))
-    val cands = bucketed.join(broadcast(q),
+    topK(bucketed.join(broadcast(q),
         col("q_t") === col("t") && col("q_code") === col("code") &&
           col("vec_id") =!= col("q_id"))
       .dropDuplicates("q_id", "vec_id")
-      .withColumn("cosine", dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    cands.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TOPK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
+      .withColumn("cosine", cosineCol))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -471,17 +455,7 @@ object Similarity {
     // raise_error behind a never-true-on-healthy-data filter, failing the
     // job with a pointer to the scale paths (s2/s4) instead of silently
     // OOMing the driver. Cap configurable via `graft.ann.maxQuerySet`.
-    "s1_knn_brute" -> { (s, d) =>
-      val e = normed(s, d)
-      val scored = e.join(broadcast(guardedQuerySet(s, e, "s1_knn_brute")),
-        col("vec_id") =!= col("q_id"))
-        .withColumn("cosine", dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= TOPK)
-        .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("cosine"))
-        .orderBy(col("q_id"), col("rk"))
-    },
+    "s1_knn_brute" -> ((s, d) => topK(bruteScan(s, d, "s1_knn_brute"))),
     // Multi-table sign-LSH bucketed ANN: L tables of k sign-bits; a query
     // meets only candidates sharing a (table, code) bucket in ≥ 1 table.
     "s2_knn_lsh" -> ((s, d) => signLshKnn(s, d, TABLES, BITS, "s2_knn_lsh")),
@@ -597,12 +571,7 @@ object Similarity {
     // s1 (bounded query set, corpus never shuffles); the margin is one
     // exact double subtraction, so the row set is oracle-stable.
     "s7_margin_mining" -> { (s, d) =>
-      val e = normed(s, d)
-      val scored = e.join(broadcast(guardedQuerySet(s, e, "s7_margin_mining")),
-        col("vec_id") =!= col("q_id"))
-        .withColumn("cosine", dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w))
+      bruteScan(s, d, "s7_margin_mining").withColumn("rk", cosineRank)
         .filter(col("rk") <= 2)
         .groupBy(col("q_id"))
         .agg(
@@ -621,12 +590,7 @@ object Similarity {
     // corpus-proportional eval belongs on s2/s4 candidates). The ratio is
     // one IEEE division of exact BIGINTs — hash-oracle-safe.
     "s8_knn_accuracy" -> { (s, d) =>
-      val e = normed(s, d)
-      val scored = e.join(broadcast(guardedQuerySet(s, e, "s8_knn_accuracy")),
-        col("vec_id") =!= col("q_id"))
-        .withColumn("cosine", dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w))
+      bruteScan(s, d, "s8_knn_accuracy").withColumn("rk", cosineRank)
         .filter(col("rk") === 1)
         .groupBy(col("q_label"))
         .agg(count(lit(1)).as("n_q"),
@@ -647,10 +611,7 @@ object Similarity {
     // corpus scan. Ranks use the (cosine desc, vec_id) total order —
     // deterministic, hash-oracle-safe.
     "s9_triplet_mining" -> { (s, d) =>
-      val e = normed(s, d)
-      val scored = e.join(broadcast(guardedQuerySet(s, e, "s9_triplet_mining")),
-        col("vec_id") =!= col("q_id"))
-        .withColumn("cosine", dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
+      val scored = bruteScan(s, d, "s9_triplet_mining")
         .withColumn("same", col("label") === col("q_label"))
       val w = Window.partitionBy(col("q_id"), col("same"))
         .orderBy(col("cosine").desc, col("vec_id"))
@@ -739,14 +700,10 @@ object Similarity {
         .withColumn("qvec", sq8(col("embedding"), col("maxabs")))
         .withColumn("qsq", ivec_dot(col("qvec"), col("qvec")))
         .drop("maxabs")
-      val q = guardedBounded(s,
-        coded.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("sq").as("q_sq"), col("qvec").as("q_qvec"),
-            col("qsq").as("q_qsq")), "s12_sq8_recall")
+      val q = querySet(s, coded, "s12_sq8_recall",
+        qCore(col("qvec").as("q_qvec"), col("qsq").as("q_qsq")): _*)
       val scored = coded.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .withColumn("cos_e",
-          dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
+        .withColumn("cos_e", cosineCol)
         // A valid vector CAN quantize to all-zero (every |x| < m/254) —
         // s5's zero-norm guard: NULL cosine (DuckDB x/0 semantics),
         // ranked last on both engines.
@@ -801,12 +758,7 @@ object Similarity {
     // design: a hit whose document fails validity is dropped (rk gaps
     // stay visible — the caller should know a hit was unservable).
     "s14_rag_retrieve" -> { (s, d) =>
-      val e = normed(s, d)
-      val scored = e.join(broadcast(guardedQuerySet(s, e, "s14_rag_retrieve")),
-        col("vec_id") =!= col("q_id"))
-        .withColumn("cosine", dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-      val hits = scored.withColumn("rk", row_number().over(w))
+      val hits = bruteScan(s, d, "s14_rag_retrieve").withColumn("rk", cosineRank)
         .filter(col("rk") <= 3)
         .select(col("q_id"), col("vec_id").as("doc_id"), col("rk"), col("cosine"))
       Tables.validDocuments(s, d)
@@ -890,15 +842,11 @@ object Similarity {
         .withColumn("emb2", slice(col("embedding"), 1, p2))
         .withColumn("sq1", vec_dot(col("emb1"), col("emb1")))
         .withColumn("sq2", vec_dot(col("emb2"), col("emb2")))
-      val q = guardedBounded(s,
-        withP.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("sq").as("q_sq"), col("emb1").as("q_emb1"),
-            col("sq1").as("q_sq1"), col("emb2").as("q_emb2"),
-            col("sq2").as("q_sq2")), "s16_prefix_recall")
+      val q = querySet(s, withP, "s16_prefix_recall",
+        qCore(col("emb1").as("q_emb1"), col("sq1").as("q_sq1"), col("emb2").as("q_emb2"),
+          col("sq2").as("q_sq2")): _*)
       val scored = withP.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .withColumn("cos_f",
-          dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
+        .withColumn("cos_f", cosineCol)
         .withColumn("cos_1", when(col("q_sq1") =!= 0.0 && col("sq1") =!= 0.0,
           dotCol("q_emb1", "emb1") / (sqrt(col("q_sq1")) * sqrt(col("sq1")))))
         .withColumn("cos_2", when(col("q_sq2") =!= 0.0 && col("sq2") =!= 0.0,
@@ -971,7 +919,7 @@ object Similarity {
     // count is geometry-fixed, so the cut is a CONSTANT factor on
     // collision mass; dense corpora should raise bits (fewer, tighter
     // tables), bounded by the 64-bit signature. The Hamming pool and cosine rerank are s17's
-    // verbatim tail (shared [[hammingRerank]]); the 1×0 geometry collapses
+    // tail (shared [[hammingRerank]]); the 1×0 geometry collapses
     // the pipeline onto s17's exact plan, which is what keeps the shared
     // path hash-oracled while this production row is recall-pinned.
     "s17_scale" -> ((s, d) => hammingRerank(s, d, 12, 5, "s17_scale")),
@@ -986,20 +934,22 @@ object Similarity {
     // once per query, and each candidate scores as M table-lookup ADDS
     // (a pure Catalyst aggregate-HOF over the codes array — no float
     // multiply, no UDF, codegen'd). The ADC top-`pool` then reranks with
-    // exact cosine, s17's verbatim tail. At 100 TB the ADC scan reads the
+    // exact cosine, s17's tail ([[rerank]]). It runs s19's IVFADC pipeline
+    // over one all-zero coarse cell ([[originCell]]): plain PQ is IVFADC
+    // with nothing to route. At 100 TB the ADC scan reads the
     // CODES table (M bytes/vector); embeddings are touched only for the
     // (|Q|·pool)-row rerank via broadcast id joins — vectors never
     // shuffle, never cross-product. Codebook quality affects only WHICH
     // candidates reach the pool (recall-pinned in SimilaritySpec);
     // correctness of everything downstream is hash-certified by the twin.
-    "s18_pq_adc" -> ((s, d) => pqRerank(s, d, 20, "s18_pq_adc")),
+    "s18_pq_adc" -> ((s, d) => ivfPqKnn(s, d, originCell, 1, 20, "s18_pq_adc")),
     // s18 with the pool cut OPEN (pool ≥ any corpus): every candidate is
     // exactly reranked, so the ADC ordering cancels out of the answer and
     // the pipeline collapses to s1's brute force — s1's SQL verbatim
     // oracles the codebook/encode/LUT/rank plumbing (the s2/s4/s13/s17
     // exhaustive-twin convention on the fourth quantization family).
     "s18_exhaustive" -> ((s, d) =>
-      pqRerank(s, d, Int.MaxValue, "s18_exhaustive")
+      ivfPqKnn(s, d, originCell, 1, Int.MaxValue, "s18_exhaustive")
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
           col("rank").as("rk"), col("cosine"))
         .orderBy(col("q_id"), col("rk"))),
@@ -1030,7 +980,7 @@ object Similarity {
     // scalar add + M table-lookup adds in a codegen'd aggregate-HOF. The
     // IVF cut and the ADC cut compose: only vectors in the NPROBE
     // nearest cells are scored, only the top-`pool` pay an exact cosine
-    // (s17's verbatim rerank tail). At 100 TB the scan reads the codes
+    // (s17's rerank tail, [[rerank]]). At 100 TB the scan reads the codes
     // table bucketed by cell; embeddings are touched only for the
     // (|Q|·pool)-row rerank via broadcast id joins. s19_exhaustive probes
     // every cell AND opens the pool, so each (q, vec) pair is scored
@@ -1038,9 +988,9 @@ object Similarity {
     // s1's brute force under s1's verbatim oracle (the exhaustive-twin
     // convention, fifth instance), proving the route/encode/LUT/rank
     // plumbing introduces no error beyond the documented cuts.
-    "s19_ivfpq" -> ((s, d) => ivfPqKnn(s, d, S19_NPROBE, S19_POOL, "s19_ivfpq")),
+    "s19_ivfpq" -> ((s, d) => ivfPqKnn(s, d, ivfCells, S19_NPROBE, S19_POOL, "s19_ivfpq")),
     "s19_exhaustive" -> ((s, d) =>
-      ivfPqKnn(s, d, NLIST, Int.MaxValue, "s19_exhaustive")
+      ivfPqKnn(s, d, ivfCells, NLIST, Int.MaxValue, "s19_exhaustive")
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
           col("rank").as("rk"), col("cosine"))
         .orderBy(col("q_id"), col("rk"))),
@@ -1075,10 +1025,10 @@ object Similarity {
     // now flips a CORRECTNESS hash, not just a spec floor.
     "s18_recall" -> ((s, d) =>
       recallHashRow(s, d, "s18_recall",
-        pqRerank(s, d, 20, "s18_recall").select(col("q_id"), col("vec_id")))),
+        ivfPqKnn(s, d, originCell, 1, 20, "s18_recall").select(col("q_id"), col("vec_id")))),
     "s19_recall" -> ((s, d) =>
       recallHashRow(s, d, "s19_recall",
-        ivfPqKnn(s, d, S19_NPROBE, S19_POOL, "s19_recall")
+        ivfPqKnn(s, d, ivfCells, S19_NPROBE, S19_POOL, "s19_recall")
           .select(col("q_id"), col("vec_id")))),
     "s20_recall" -> ((s, d) =>
       recallHashRow(s, d, "s20_recall",
@@ -1092,17 +1042,7 @@ object Similarity {
     * recall rows and SimilaritySpec's independent recompute pin. */
   private[graft] def recallPerQuery(s: SparkSession, d: String, op: String,
       approx: DataFrame): DataFrame = {
-    val e = normed(s, d)
-    val q = guardedBounded(s,
-      e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("sq").as("q_sq")), op)
-    val byQ = Window.partitionBy(col("q_id"))
-    val exact5 = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-      .withColumn("rk",
-        row_number().over(byQ.orderBy(col("cos").desc, col("vec_id"))))
+    val exact5 = bruteScan(s, d, op).withColumn("rk", cosineRank)
       .filter(col("rk") <= TOPK)
       .select(col("q_id"), col("vec_id"))
     exact5.join(approx.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
@@ -1180,9 +1120,8 @@ object Similarity {
 
   /** Shared sign-signature Hamming-pool + exact-cosine-rerank pipeline —
     * s17 (1 table × 0 bits = one shared bucket = exhaustive, the
-    * hash-oracled anchor) and s17_scale (12 × 5 disjoint chunk probing
-    * by default — the geometry sweep table above `s17_scale` is the
-    * source of truth; conf-tunable)
+    * hash-oracled anchor) and s17_scale (12 × 5 disjoint chunk probing —
+    * the geometry sweep table above `s17_scale` is the source of truth)
     * differ ONLY in the candidate stage, so the two can never drift.
     *
     * Scale shape: vectors NEVER shuffle — the bucketed side carries
@@ -1201,10 +1140,7 @@ object Similarity {
     require(dim <= 64, s"$op packs $dim sign bits > 64")
     require(tables * bits <= 64, s"$op chunks $tables×$bits exceed 64 bits")
     val e = normed(s, d).withColumn("sig", sign_pack(col("embedding")))
-    val q = guardedBounded(s,
-      e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("sq").as("q_sq"), col("sig").as("q_sig")), op)
+    val q = querySet(s, e, op, qCore(col("sig").as("q_sig")): _*)
     val byQ = Window.partitionBy(col("q_id"))
     val cands =
       if (tables == 1 && bits == 0)
@@ -1237,126 +1173,39 @@ object Similarity {
         row_number().over(byQ.orderBy(col("hamming"), col("vec_id"))))
       .filter(col("hrk") <= POOL)
       .select(col("q_id"), col("vec_id"), col("hamming"))
-    val reranked = e.select(col("vec_id"), col("embedding"), col("sq"))
-      .join(broadcast(pool), "vec_id")
-      .join(broadcast(q.select(col("q_id"), col("q_emb"), col("q_sq"))), "q_id")
-      .withColumn("cosine",
-        dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-    reranked
-      .withColumn("rank",
-        row_number().over(byQ.orderBy(col("cosine").desc, col("vec_id"))).cast("int"))
-      .filter(col("rank") <= TOPK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("hamming"), col("cosine"))
-      .orderBy(col("q_id"), col("rank"))
+    rerank(e, q, pool, "hamming")
   }
 
-  /** Shared PQ encode → ADC pool → exact-cosine-rerank pipeline — s18
-    * (pool = 20, the production ADC cut) and s18_exhaustive (pool open =
-    * every candidate reranked ⇒ collapses to s1) differ ONLY in the pool
-    * bound, so the two can never drift. Geometry PQ_M × PQ_K (8
-    * sub-spaces × 16 centroids = 8 code bytes per vector on the 64-dim
-    * corpus). See the s18 entries for the scale rationale; determinism:
-    * codebooks come from [[trainCentroids]] (fixed seed, fixed
-    * iterations, sequential fold) over per-sub-space
-    * slices of the same first-SAMPLE rows IVF trains on, encode ties
-    * break to the lower code (nearestCells), and the ADC sum folds in
-    * fixed sub-space order — bit-stable across runs and partitionings. */
-  private def pqRerank(s: SparkSession, d: String, pool: Int, op: String): DataFrame = {
-    import s.implicits._
-    val dim = Tables.embDim(s)
-    require(dim % PQ_M == 0, s"$op: dim $dim does not split into $PQ_M sub-spaces")
-    val sub = dim / PQ_M
-    val e = normed(s, d)
-    val sample = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .orderBy(col("vec_id")).limit(SAMPLE).collect().map(_._2)
-    val books: Array[Array[Array[Double]]] = Array.tabulate(PQ_M) { mm =>
-      // ppSeed measured on this corpus (r15): k-means++ does NOT move
-      // recall@5 (0.58 vs 0.60 at sf0.01, 0.325 vs 0.335 at sf0.1) — the
-      // synthetic embeddings are isotropic, so D²-weighted seeding buys
-      // nothing; uniform stays shipped, the capability stays testable.
-      Similarity.trainCentroids(sample.map(_.slice(mm * sub, (mm + 1) * sub)), PQ_K,
-        ppSeed = false)
-    }
-    // trainCentroids returns min(PQ_K, |sample|) centroids; every sub-space
-    // trains on the same sample rows, so all books share one length. The
-    // LUT stride and the ADC lookup stride must BOTH be this effective k
-    // (a fixed-PQ_K stride would misindex on a corpus smaller than PQ_K).
-    require(sample.nonEmpty, s"$op: empty embedding corpus")
-    val kEff = books(0).length
-    val bc = s.sparkContext.broadcast(books)
-    def encode(emb: Array[Float]): Array[Int] = {
-      val bs = bc.value
-      Array.tabulate(bs.length)(mm =>
-        Similarity.nearestCells(emb.slice(mm * sub, (mm + 1) * sub), bs(mm), 1)(0))
-    }
-    val coded = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, emb) => (id, encode(emb)) })
-      .toDF("vec_id", "codes")
-    val q = guardedBounded(s,
-      e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("sq").as("q_sq")), op)
-    val qLut = q.select(col("q_id"), col("q_emb")).as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val bs = bc.value
-        it.map { case (id, emb) =>
-          val lut = new Array[Double](bs.length * bs(0).length)
-          var mm = 0
-          while (mm < bs.length) {
-            var kk = 0
-            while (kk < bs(mm).length) {
-              var dot = 0.0
-              var j = 0
-              while (j < sub) { dot += emb(mm * sub + j) * bs(mm)(kk)(j); j += 1 }
-              lut(mm * bs(mm).length + kk) = dot
-              kk += 1
-            }
-            mm += 1
-          }
-          (id, lut)
-        }
-      }.toDF("q_id", "lut")
-    val byQ = Window.partitionBy(col("q_id"))
-    val poolDf = coded.join(broadcast(qLut), col("vec_id") =!= col("q_id"))
-      .withColumn("adc", expr(
-        s"aggregate(sequence(0, ${PQ_M - 1}), CAST(0 AS DOUBLE), " +
-          s"(acc, i) -> acc + element_at(lut, i * $kEff + element_at(codes, i + 1) + 1))"))
-      .withColumn("prk",
-        row_number().over(byQ.orderBy(col("adc").desc, col("vec_id"))))
-      .filter(col("prk") <= pool)
-      .select(col("q_id"), col("vec_id"), col("adc"))
-    val reranked = e.select(col("vec_id"), col("embedding"), col("sq"))
-      .join(broadcast(poolDf), "vec_id")
-      .join(broadcast(q.select(col("q_id"), col("q_emb"), col("q_sq"))), "q_id")
-      .withColumn("cosine",
-        dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-    reranked
-      .withColumn("rank",
-        row_number().over(byQ.orderBy(col("cosine").desc, col("vec_id"))).cast("int"))
-      .filter(col("rank") <= TOPK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc"), col("cosine"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+  /** s19's coarse quantizer: NLIST k-means cells. */
+  private val ivfCells = (sample: Array[Array[Float]]) => trainCentroids(sample, NLIST)
 
-  /** Shared IVFADC pipeline — s19_ivfpq (S19_NPROBE cells, S19_POOL) and
-    * s19_exhaustive (all cells, pool open ⇒ collapses to s1) differ only
-    * in the two cut parameters, so the twins can never drift. Residual
-    * PQ: codes quantize x − c_cell, trained on the residuals of the same
-    * deterministic sample the coarse quantizer trains on. Determinism:
-    * fixed-seed coarse + book training, sequential LUT fold, encode ties
-    * break to the lower code, ADC ties to the lower vec_id, rerank ties
-    * (cosine, vec_id) — bit-stable across runs and partitionings. */
-  private[graft] def ivfPqKnn(s: SparkSession, d: String, nprobe: Int, pool: Int,
+  /** s18's coarse quantizer: one all-zero cell. The residual against the
+    * origin is x itself and q·c adds 0.0, so IVFADC over it at nprobe 1 is
+    * plain PQ + ADC (books on raw sub-vectors, one LUT per query), bit for
+    * bit. */
+  private val originCell = (sample: Array[Array[Float]]) => Array(new Array[Double](sample(0).length))
+
+  /** The one PQ pipeline: IVFADC — s19_ivfpq (S19_NPROBE cells, S19_POOL)
+    * and s19_exhaustive (all cells, pool open ⇒ collapses to s1) differ
+    * only in the two cut parameters, so the twins can never drift.
+    * Residual PQ: codes quantize x − c_cell, trained on the residuals of
+    * the same deterministic sample the coarse quantizer (`coarseCells`,
+    * from that sample) trains on. s18 is this pipeline over
+    * [[originCell]]. Determinism: fixed-seed coarse + book training,
+    * sequential LUT fold, encode ties break to the lower code, ADC ties to
+    * the lower vec_id, rerank ties (cosine, vec_id) — bit-stable across
+    * runs and partitionings. */
+  private[graft] def ivfPqKnn(s: SparkSession, d: String,
+      coarseCells: Array[Array[Float]] => Array[Array[Double]], nprobe: Int, pool: Int,
       op: String): DataFrame = {
     import s.implicits._
     val dim = Tables.embDim(s)
     require(dim % PQ_M == 0, s"$op: dim $dim does not split into $PQ_M sub-spaces")
     val sub = dim / PQ_M
     val e = normed(s, d)
-    val sample = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .orderBy(col("vec_id")).limit(SAMPLE).collect().map(_._2)
+    val sample = trainingSample(s, e)
     require(sample.nonEmpty, s"$op: empty embedding corpus")
-    val coarse = Similarity.trainCentroids(sample, NLIST)
+    val coarse = coarseCells(sample)
     // PQ books train on the RESIDUAL sample — the distribution the codes
     // will actually quantize (training on raw vectors would center every
     // sub-space book on the cell means instead of around zero).
@@ -1367,7 +1216,11 @@ object Similarity {
     val books = Array.tabulate(PQ_M) { mm =>
       Similarity.trainCentroids(resSample.map(_.slice(mm * sub, (mm + 1) * sub)), PQ_K)
     }
-    val kEff = books(0).length // min(PQ_K, |sample|) — the LUT/ADC stride
+    // trainCentroids returns min(PQ_K, |sample|) centroids; every
+    // sub-space trains on the same sample rows, so all books share this
+    // one length, the LUT and ADC stride (a fixed-PQ_K stride would
+    // misindex on a corpus smaller than PQ_K).
+    val kEff = books(0).length
     val bcC = s.sparkContext.broadcast(coarse)
     val bcB = s.sparkContext.broadcast(books)
     val coded = e.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
@@ -1383,10 +1236,7 @@ object Similarity {
           (id, cell, codes)
         }
       }.toDF("vec_id", "cell", "codes")
-    val q = guardedBounded(s,
-      e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("sq").as("q_sq")), op)
+    val q = querySet(s, e, op, qCore(): _*)
     // Per query: ONE sub-space LUT (q_m·book_m[k], cell-independent under
     // the inner-product decomposition) + one q·c_cell scalar per probed
     // cell. |Q| × nprobe rows, broadcast onto the codes table.
@@ -1426,17 +1276,7 @@ object Similarity {
         row_number().over(byQ.orderBy(col("adc").desc, col("vec_id"))))
       .filter(col("prk") <= pool)
       .select(col("q_id"), col("vec_id"), col("adc"))
-    val reranked = e.select(col("vec_id"), col("embedding"), col("sq"))
-      .join(broadcast(poolDf), "vec_id")
-      .join(broadcast(q.select(col("q_id"), col("q_emb"), col("q_sq"))), "q_id")
-      .withColumn("cosine",
-        dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-    reranked
-      .withColumn("rank",
-        row_number().over(byQ.orderBy(col("cosine").desc, col("vec_id"))).cast("int"))
-      .filter(col("rank") <= TOPK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc"), col("cosine"))
-      .orderBy(col("q_id"), col("rank"))
+    rerank(e, q, poolDf, "adc")
   }
 
   /** Shared incremental-index pipeline — see the s20 map entries. The
@@ -1451,17 +1291,6 @@ object Similarity {
       op: String): DataFrame = {
     import s.implicits._
     val e = normed(s, d).select(col("vec_id"), col("embedding"), col("sq"))
-    def assign(df: DataFrame, cents: Array[Array[Double]]): DataFrame = {
-      val bcC = s.sparkContext.broadcast(cents)
-      df.select(col("vec_id"), col("embedding"), col("sq"))
-        .as[(Long, Array[Float], Double)]
-        .mapPartitions { it =>
-          val cs = bcC.value
-          it.map { case (id, emb, sq) =>
-            (id, emb, sq, Similarity.nearestCells(emb, cs, 1)(0))
-          }
-        }.toDF("vec_id", "embedding", "sq", "cell")
-    }
     // The cutoff and the codebook are the index's state: the build derives
     // them once and keeps them in the layout's marker — the cut on the
     // first line, then one centroid per line as the hex of each double's
@@ -1476,12 +1305,10 @@ object Similarity {
       // Vintage = first 15/16 of the key span (t30's cutoff idiom); the
       // literal folds into the delta scan's pushed filter.
       val cut = lo + ((hi - lo) / 16L) * 15L
-      val sample = e.filter(col("vec_id") <= cut)
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .orderBy(col("vec_id")).limit(SAMPLE).collect().map(_._2)
+      val sample = trainingSample(s, e.filter(col("vec_id") <= cut))
       require(sample.nonEmpty, s"$op: empty vintage")
       val cents = Similarity.trainCentroids(sample, NLIST)
-      assign(e.filter(col("vec_id") <= cut), cents)
+      assignCells(s, e.filter(col("vec_id") <= cut), cents)
         .write.mode("overwrite").partitionBy("cell").parquet(dir.toString)
       (cut.toString +: cents.map(_.map(v =>
         java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(v))).mkString(",")))
@@ -1491,10 +1318,7 @@ object Similarity {
     val cut = state.head.toLong
     val cents = state.tail.map(_.split(",").map(h =>
       java.lang.Double.longBitsToDouble(java.lang.Long.parseUnsignedLong(h, 16))))
-    val qRows = guardedBounded(s,
-      e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("sq").as("q_sq")), op)
+    val qRows = querySet(s, e, op, qCore(): _*)
       .as[(Long, Array[Float], Double)].collect()
     val probed: Array[(Long, Array[Float], Double, Int)] = qRows.flatMap {
       case (id, emb, sq) =>
@@ -1513,19 +1337,12 @@ object Similarity {
     val base = Tables.parquet(s, vintage.dir.toString)
       .filter(col("cell").isin(probeCells.map(Int.box): _*))
       .select(col("vec_id"), col("embedding"), col("sq"), col("cell"))
-    val delta = assign(e.filter(col("vec_id") > cut), cents)
+    val delta = assignCells(s, e.filter(col("vec_id") > cut), cents)
       .filter(col("cell").isin(probeCells.map(Int.box): _*))
-    val cands = base.unionByName(delta)
+    topK(base.unionByName(delta)
       .join(broadcast(qProbe), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        dotCol("q_emb", "embedding") / (sqrt(col("q_sq")) * sqrt(col("sq"))))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cands.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TOPK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
+      .withColumn("cosine", cosineCol))
   }
 
   /** The certified-corpus pin table for the three recall rows:

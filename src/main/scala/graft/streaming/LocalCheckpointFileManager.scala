@@ -4,7 +4,7 @@ import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, LocalFileSystem, Path}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** Spark's FileSystem checkpoint manager, except that on the local file
@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * reads a file without one unverified, so checkpoints of Spark's
   * managers, sidecars included, restart on this one. Other file systems,
   * and a rename onto an existing file without overwrite (Spark's
-  * `FileAlreadyExistsException`), keep Spark's path. */
+  * `FileAlreadyExistsException`), keep Spark's path; on the local file
+  * system that refusal also deletes the temp file. */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends FileSystemBasedCheckpointFileManager(path, hadoopConf) {
 
@@ -39,6 +40,14 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
         val replace = if (overwriteIfPossible) Seq(StandardCopyOption.REPLACE_EXISTING) else Nil
         Files.move(local.pathToFile(srcPath).toPath, local.pathToFile(dstPath).toPath,
           StandardCopyOption.ATOMIC_MOVE +: replace: _*)
+      case local: LocalFileSystem =>
+        // Spark's stream keeps the temp file when this rename is refused.
+        try super.renameTempFile(srcPath, dstPath, overwriteIfPossible)
+        catch {
+          case e: FileAlreadyExistsException =>
+            Files.deleteIfExists(local.pathToFile(srcPath).toPath)
+            throw e
+        }
       case _ => super.renameTempFile(srcPath, dstPath, overwriteIfPossible)
     }
 }

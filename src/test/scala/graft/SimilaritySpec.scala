@@ -26,10 +26,7 @@ class SimilaritySpec extends SparkTestBase {
     // 8×16 ADC over a 20-candidate pool, uniform codebook seeding:
     // measured mean 0.56 at sf0.001 / 0.60 at sf0.01 (r15). Floor =
     // measured − 0.16 margin for corpus-regen variance (this isotropic
-    // corpus is PQ's hard case — no cluster structure to exploit;
-    // k-means++ seeding was measured and does NOT move recall here:
-    // 0.58/0.325 vs 0.60/0.335 at sf0.01/sf0.1 — kept available via
-    // trainCentroids(ppSeed = true), not shipped).
+    // corpus is PQ's hard case — no cluster structure to exploit).
     assert(recall >= 0.4, s"s18 PQ recall@5 $recall below 0.4")
   }
 
@@ -95,6 +92,34 @@ class SimilaritySpec extends SparkTestBase {
     assert(row.length == 1, "collapsed recall row is a single row")
     assert(row(0).getAs[Long]("n_queries") == perQ.size.toLong)
     assert(row(0).getAs[Long]("sum_common") == perQ.values.sum)
+  }
+
+  // The rows-only ANN outputs, pinned to the bit at sf0.001: row count and
+  // the md5 of the sorted rows, each double rendered as its raw bits. The
+  // recall pins above cover only their (q_id, vec_id) sets; these also pin
+  // every score (adc, hamming, cosine) and the rank order.
+  private val RowPins = Seq(
+    "s2_knn_lsh" -> (50L, "76b35ba078b9c087767f1c98e52b4308"),
+    "s4_knn_ivf" -> (50L, "d947e37aeed406bb566dfcfa05ee3517"),
+    "s13_knn_ivf_sq8" -> (50L, "493187ab97fe95b4fc313347db0df034"),
+    "s17_scale" -> (50L, "3e9df7c9dc22c47188c5f592283be5d8"),
+    "s18_pq_adc" -> (50L, "7c1a87bc7bf125dd8162f2d8a022950c"),
+    "s19_ivfpq" -> (50L, "98e1e76270b231a35363d31fc603ba19"),
+    "s20_ivf_delta" -> (50L, "84b0310185624d515eeec4f0d9ec7d7c"))
+
+  test("rows-only ANN outputs match their pinned row count and md5") {
+    def render(v: Any): String = v match {
+      case x: Double => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(x))
+      case x => String.valueOf(x)
+    }
+    val got = RowPins.map { case (name, _) =>
+      val rows = graft.queries.Similarity.queries(name)(spark, sf).collect()
+        .map(_.toSeq.map(render).mkString("|")).sorted
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+        .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+      name -> (rows.length.toLong, md5)
+    }
+    assert(got == RowPins, got.mkString("\n"))
   }
 
   test("s2_knn_lsh recall@5 vs exact brute force is usable") {
@@ -173,26 +198,6 @@ class SimilaritySpec extends SparkTestBase {
     val bound = globalMax / 254.0 + 1e-12
     assert(rows.forall(_.getDouble(1) <= bound),
       s"max_abs_err exceeds the quantization step bound $bound")
-  }
-
-  test("k-means++ seeding is deterministic and never duplicates a centroid") {
-    val rnd = new scala.util.Random(123)
-    val sample = Array.fill(200)(Array.fill(8)(rnd.nextFloat()))
-    // Plant exact duplicates — the D²-weighted draw must still return k
-    // DISTINCT points (a duplicate centroid would freeze a dead cell).
-    val withDups = sample ++ sample.take(50)
-    val a = graft.queries.Similarity.trainCentroids(withDups, 16, iters = 0, ppSeed = true)
-    val b = graft.queries.Similarity.trainCentroids(withDups, 16, iters = 0, ppSeed = true)
-    assert(a.length == 16)
-    assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq, "seeded init must be bit-stable")
-    assert(a.map(_.toSeq).distinct.length == 16, "no duplicate centroids")
-    // Degenerate corpus: fewer distinct VALUES than k — the all-duplicate
-    // fallback must still fill k slots (every distinct value represented)
-    // without crashing or looping.
-    val tiny = Array.fill(30)(sample(0)) ++ sample.slice(1, 4)
-    val c = graft.queries.Similarity.trainCentroids(tiny, 16, iters = 0, ppSeed = true)
-    assert(c.length == 16)
-    assert(c.map(_.toSeq).distinct.length == 4, "all 4 distinct values chosen")
   }
 
   test("s12 quantized-index recall is measured and sane") {

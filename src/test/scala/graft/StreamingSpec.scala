@@ -347,8 +347,10 @@ class StreamingSpec extends SparkTestBase {
       try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
     assert(read == "second")
-    // Without overwrite, an existing file stays and Spark's error is raised.
+    // Without overwrite, an existing file stays, Spark's error is raised
+    // and the temp file goes.
     intercept[org.apache.hadoop.fs.FileAlreadyExistsException](write("third", overwrite = false))
+    assert(listing == Seq("0"))
     assert(read == "second")
   }
 

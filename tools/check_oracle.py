@@ -2,16 +2,23 @@
 """Local approximation of the driver's correctness gate.
 
 Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir>
+       python3 tools/check_oracle.py --against <base_verify_dir> <verify_out_dir>
 
 Reads each <out_dir>/<name>/ parquet result written by graft.Verify, runs the
 matching SQL from oracle_sql.json in DuckDB over the sf_dir parquet tables, and
 compares: schema (column names sorted), row count, and exact values (floats
 compared bit-exactly first, then with 1e-9 relative tolerance reported
 separately). Strictest plausible interpretation of the driver's hash compare.
+
+--against compares two Verify dumps instead (e.g. a change against its parent
+commit): every query directory in either dump, rows-only queries included,
+must have the same columns and column types and the same rows, with floats
+bit-exact (a -0.0/0.0 or any other bit difference fails).
 """
 import json
 import os
 import math
+import struct
 import sys
 
 import duckdb
@@ -27,6 +34,17 @@ def norm(v):
     return v
 
 
+def bitwise(v):
+    """A float as its IEEE bits; lists and structs element by element."""
+    if isinstance(v, float):
+        return struct.pack("<d", v).hex()
+    if isinstance(v, list):
+        return [bitwise(x) for x in v]
+    if isinstance(v, dict):
+        return {k: bitwise(x) for k, x in v.items()}
+    return v
+
+
 def main(out_dir, sf_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -39,14 +57,29 @@ def main(out_dir, sf_dir):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
+    report(con, {name: (f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')", sql)
+                 for name, sql in oracles.items()})
 
+
+def against(base_dir, out_dir):
+    def dumps(d):
+        return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+    names = dumps(base_dir) | dumps(out_dir)
+    report(duckdb.connect(),
+           {n: (f"SELECT * FROM read_parquet('{out_dir}/{n}/*.parquet')",
+                f"SELECT * FROM read_parquet('{base_dir}/{n}/*.parquet')") for n in names},
+           bits=True)
+
+
+def report(con, pairs, bits=False):
+    """Compare each name's (got, want) queries; print one line per name and
+    the tally, and exit non-zero on any failure. bits: column types must
+    match too, and floats compare by their bits."""
     n_pass = n_fail = 0
-    for name, sql in sorted(oracles.items()):
+    for name, (got_sql, want_sql) in sorted(pairs.items()):
         try:
-            got = con.execute(
-                f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')"
-            ).fetch_arrow_table()
-            want = con.execute(sql).fetch_arrow_table()
+            got = con.execute(got_sql).fetch_arrow_table()
+            want = con.execute(want_sql).fetch_arrow_table()
         except Exception as e:
             print(f"FAIL {name}: exec error: {e}")
             n_fail += 1
@@ -58,8 +91,14 @@ def main(out_dir, sf_dir):
             print(f"FAIL {name}: columns {g_cols} != {w_cols}")
             n_fail += 1
             continue
+        if bits and any(got.schema.field(c).type != want.schema.field(c).type for c in g_cols):
+            print(f"FAIL {name}: column types {got.schema} != {want.schema}")
+            n_fail += 1
+            continue
         g = got.select(g_cols).to_pylist()
         w = want.select(w_cols).to_pylist()
+        if bits:
+            g, w = ([{c: bitwise(v) for c, v in r.items()} for r in t] for t in (g, w))
         if len(g) != len(w):
             print(f"FAIL {name}: rows {len(g)} != {len(w)}")
             n_fail += 1
@@ -105,7 +144,7 @@ def main(out_dir, sf_dir):
                 n_pass += 1
                 continue
             i, c, a, b = bad2
-            print(f"FAIL {name}: row {i} (canon-sorted) col {c}: spark={a!r} oracle={b!r}")
+            print(f"FAIL {name}: row {i} (canon-sorted) col {c}: got={a!r} want={b!r}")
             n_fail += 1
         elif approx:
             print(f"WARN {name}: {approx} float cells only approx-equal (hash would MISMATCH)")
@@ -118,4 +157,7 @@ def main(out_dir, sf_dir):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    if sys.argv[1] == "--against":
+        against(sys.argv[2], sys.argv[3])
+    else:
+        main(sys.argv[1], sys.argv[2])
