@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators over `documents` (SURVEY.md §2.4 LLM-pipeline
   * extensions): exact, fingerprint, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -40,19 +41,21 @@ object Dedup {
   // r10 measured 0.94, random collisions cut 16×).
   //
   // Production config at high density (the r10 verdict's d7 boundary):
-  // sign-LSH pays off at TIGHT thresholds — set
-  // `graft.dedup.d7Threshold=0.8` (+ d7TargetRecall=0.9) and the derived
-  // 8-bit tables keep the candidate volume 16× below the r10 fixed-4-bit
-  // geometry, passing the candidate guard at sf100 density where 4-bit
-  // tables degenerate to the full pair set. At the LOOSE default (θ=0.3,
-  // where p=0.597 makes every added bit cost 40% recall for a 2× prune),
-  // no (k, L) prunes without gutting recall — there the guard's d6
-  // fallback remains the honest answer (BENCHNOTES r10/r11).
+  // sign-LSH pays off at TIGHT thresholds — `signLshPairs` at θ=0.8 with
+  // the bits d7Geometry(0.8, 16, 0.9) derives: 8-bit tables keep the
+  // candidate volume 16× below the r10 fixed-4-bit geometry, passing the
+  // candidate guard at sf100 density where 4-bit tables degenerate to the
+  // full pair set. At the LOOSE d7 query's θ=0.3 (where p=0.597 makes
+  // every added bit cost 40% recall for a 2× prune), no (k, L) prunes
+  // without gutting recall — there the guard's d6 fallback remains the
+  // honest answer (BENCHNOTES r10/r11).
   //
   // All geometries slice one fixed 256-plane pool (seed unchanged), so the
-  // default (θ=0.3, target 0.85 → k=4, L=16) reproduces r10's codes
-  // bit-for-bit and every conf choice is deterministic across runs.
+  // d7 query (θ=0.3, target 0.85 → k=4, L=16) reproduces r10's codes
+  // bit-for-bit and every geometry is deterministic across runs.
+  private val D7_THRESHOLD = 0.3
   private val D7_TABLES = 16
+  private val D7_TARGET_RECALL = 0.85
   private val D7_MAX_BITS = 16
   private[queries] lazy val d7Planes: Array[Array[Double]] = {
     val rnd = new scala.util.Random(7)
@@ -131,25 +134,21 @@ object Dedup {
     * occupancy grows ∝ n and the candidate set ∝ Σ occ². The exact
     * per-label Σ bn(bn−1)/2 over the domain-bound bucket-count table
     * (≤ labels·tables·2^bits rows) is compared to the cap BEFORE any pair
-    * is generated. Both factors ride DECIMAL(38,0) — bn*(bn-1) in BIGINT
-    * wraps (non-ANSI) once a bucket holds ~3e9 rows, exactly the density
-    * regime the guard exists to catch (the e22 overflow lesson) — and the
-    * count table joins back on `label`, a keyed broadcast hash join (the
-    * no-BNLJ plan pin holds) that also lets the error NAME the offending
-    * label. The default cap admits today's corpora (sf100 ≈ 8.2e7 per
+    * is generated ([[pairCount]]), and the count table joins back on
+    * `label`, a keyed broadcast hash join (the no-BNLJ plan pin holds)
+    * that also lets the error NAME the offending label. The default cap admits today's corpora (sf100 ≈ 8.2e7 per
     * label at 4 bits) and fails fast around the next decade, where the
     * honest answers are the tighter-threshold 8-bit geometry (16× fewer
     * candidates) or d6 under maxExactBlock label blocks. */
   private[graft] def signLshPairs(s: SparkSession, emb: DataFrame,
       threshold: Double, tables: Int, bits: Int): DataFrame = {
-    // Geometry must slice inside the fixed plane pool: conf knobs
-    // (graft.dedup.d7Tables × the threshold-derived bit count) can
-    // otherwise index past it and die as an opaque
-    // ArrayIndexOutOfBoundsException inside a task.
+    // Geometry must slice inside the fixed plane pool: a caller's table
+    // count × the threshold-derived bit count can otherwise index past it
+    // and die as an opaque ArrayIndexOutOfBoundsException inside a task.
     require(tables * bits <= d7Planes.length,
       s"sign-LSH geometry $tables tables x $bits bits needs ${tables * bits} " +
-        s"planes > the fixed pool of ${d7Planes.length}; lower " +
-        "graft.dedup.d7Tables or raise graft.dedup.d7Threshold")
+        s"planes > the fixed pool of ${d7Planes.length}; lower the table " +
+        "count or the bits per table")
     import s.implicits._
     import graft.functions.VecFunctions.vec_dot
     val coded = emb.select(col("vec_id"), col("label"), col("embedding"))
@@ -168,19 +167,15 @@ object Dedup {
     val est = buckets.groupBy(col("label"), col("t"), col("code"))
       .agg(count(lit(1)).as("bn"))
       .groupBy(col("label"))
-      .agg(sum(expr(
-        "CAST(bn AS DECIMAL(38,0)) * CAST(bn - 1 AS DECIMAL(38,0)) / 2"))
-        .as("__cand"))
-    val guarded = buckets.join(broadcast(est), "label")
-      .filter(when(col("__cand") > maxCand, raise_error(format_string(
-        "d7_embedding_neardup_lsh: label %s has ~%s candidate pairs > " +
-          "graft.dedup.d7MaxCandidates=%s; raise the cap, tighten " +
-          "graft.dedup.d7Threshold (0.8 derives 8-bit tables, 16x fewer " +
-          "candidates), or at this density use d6_embedding_neardup within " +
-          "maxExactBlock label blocks (BENCHNOTES r10: 4-bit LSH no longer " +
-          "prunes here)",
-        col("label"), col("__cand"), lit(maxCand)))).isNull)
-      .drop("__cand")
+      .agg(pairCount("bn"))
+    val admitted = guarded(buckets, est, Seq("label"), maxCand)(format_string(
+      "d7_embedding_neardup_lsh: label %s has ~%s candidate pairs > " +
+        "graft.dedup.d7MaxCandidates=%s; raise the cap, use a tighter " +
+        "sign-LSH threshold (0.8 derives 8-bit tables, 16x fewer " +
+        "candidates), or at this density use d6_embedding_neardup within " +
+        "maxExactBlock label blocks (BENCHNOTES r10: 4-bit LSH no longer " +
+        "prunes here)",
+      col("label"), col("__cand"), lit(maxCand)))
     // Pair-join parallelism = #distinct (label, t, code) keys. The
     // degenerate exhaustive geometry (bits = 0) collapses that to #labels
     // — measured at sf100 density: 8.2e8 candidate pairs admitted by the
@@ -191,19 +186,13 @@ object Dedup {
     // geometries already have bucket-count ≫ cores, so they get S = 1 and
     // their plan is byte-identical to before.
     val saltN = if (bits == 0) 32 else 1
-    val aSide = guarded.withColumn("__salt",
+    val aSide = admitted.withColumn("__salt",
       if (saltN == 1) lit(0) else pmod(hash(col("vec_id")), lit(saltN)))
     val bSide =
       if (saltN == 1) buckets.withColumn("__salt", lit(0))
       else buckets.withColumn("__salt",
         explode(sequence(lit(0), lit(saltN - 1))))
-    val cands = aSide.as("a").join(bSide.as("b"),
-        col("a.label") === col("b.label") && col("a.t") === col("b.t") &&
-          col("a.code") === col("b.code") && col("a.__salt") === col("b.__salt") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-    cands
+    bucketPairs(aSide, bSide, Seq("label", "t", "code", "__salt"), "vec_id", "vec_a", "vec_b")
       .join(emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"),
         col("sq").as("sq_a"), col("label")), "vec_a")
       .join(emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"),
@@ -215,13 +204,6 @@ object Dedup {
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
-  /** Distinct word-3-gram shingles of lowercased text. Computed in typed
-    * Scala rather than SQL higher-order functions: HOFs are interpreted (no
-    * codegen), and worse, projection collapse inlines the `split` into every
-    * `element_at` lambda, re-running the regex O(words) times per row
-    * (measured: two orders of magnitude slower at sf0.1). The typed map is
-    * also an optimizer barrier, so downstream references reuse the
-    * materialized array. */
   /** The shingle family's tokenization (d3/d5/t8/t13 share it — ONE
     * definition so the trigram universes cannot drift apart). limit -1
     * keeps trailing empty tokens — parity with both Spark SQL split and
@@ -229,74 +211,60 @@ object Dedup {
   private[queries] def wordsOf(text: String): Array[String] =
     text.toLowerCase.split("\\s+", -1)
 
-  /** Test hook: the exact shingle set the operators use (SketchSpec pins
-    * the sketch twins' lossless-regime headroom against it). */
-  private[graft] def shinglesForTest(text: String): Seq[String] = shinglesOf(text)
-
-  private[queries] def shinglesOf(text: String): Seq[String] = {
+  /** Distinct word-3-gram shingles of lowercased text: the exact set every
+    * operator uses (SketchSpec pins the sketch twins' lossless-regime
+    * headroom against it). */
+  private[graft] def shinglesOf(text: String): Seq[String] = {
     val words = wordsOf(text)
     if (words.length >= 3)
       (0 to words.length - 3).map(i => s"${words(i)} ${words(i + 1)} ${words(i + 2)}").distinct
     else Seq(words.mkString(" "))
   }
 
-  /** One split's exploded (doc_id, sh) pairs (d8/d11). The source filter
-    * goes BELOW the typed shingle map: the map is an optimizer barrier, so
-    * filtering above it would shingle the whole corpus in BOTH branches.
-    * Filtered first, each split is shingled exactly once and the predicate
-    * pushes into the parquet scan (PlanSpec-pinned via d8). Pairs are
-    * distinct by construction (shinglesOf de-dups within a doc). */
-  private def splitShingles(s: SparkSession, d: String, pred: Column): DataFrame = {
+  /** The d-family's one shingle source: per document that `pred` selects,
+    * `kernel` (built once per partition) maps (`key`, shingles) to a row
+    * named `names`. Computed in typed Scala rather than SQL higher-order
+    * functions: HOFs are interpreted (no codegen), and worse, projection
+    * collapse inlines the `split` into every `element_at` lambda,
+    * re-running the regex O(words) times per row (measured: two orders of
+    * magnitude slower at sf0.1). The typed map is also an optimizer
+    * barrier, so downstream references reuse the materialized array —
+    * and so `pred` goes BELOW it: filtered first, a split is shingled
+    * exactly once and the predicate pushes into the parquet scan
+    * (PlanSpec-pinned via d8), and only (key, text) is selected, because
+    * any extra column before the map is materialized for every row. */
+  private def shingled[K: TypeTag, R <: Product : TypeTag](s: SparkSession, d: String,
+      key: String, pred: Column, names: String*)(kernel: () => (K, Seq[String]) => R): DataFrame = {
     import s.implicits._
     Tables.parallelized(Tables.validDocuments(s, d))
       .filter(pred)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions(_.map { case (id, t) => (id, shinglesOf(t)) })
-      .toDF("doc_id", "shingles")
-      .select(col("doc_id"), explode(col("shingles")).as("sh"))
+      .select(col(key), col("text")).as[(K, String)]
+      .mapPartitions { it =>
+        val f = kernel()
+        it.map { case (k, text) => f(k, shinglesOf(text)) }
+      }
+      .toDF(names: _*)
   }
 
-  /** (doc_id, shingles) only — the typed map is an optimizer barrier, so
-    * pruning must happen HERE, not downstream: any extra column selected
-    * before the mapPartitions is materialized for every row whether or not
-    * a consumer uses it (d4/d5/t8 use none beyond the id). */
-  private def computedShingles(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.parallelized(Tables.validDocuments(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, shinglesOf(text)) })
-      .toDF("doc_id", "shingles")
-  }
-
-  /** The d-family's shingle source: the per-query typed map by default;
-    * with `graft.dedup.shingleDir` set, a MATERIALIZED (doc_id, shingles)
-    * parquet table — provisioned on first use under a corpus-tagged
-    * subdirectory of the given base directory (`auto` = the warehouse,
-    * the bucketedTable idiom). Rationale (r12): every d-family member re-shingles the corpus
-    * from text; a production pipeline shingles 100 TB ONCE and every
-    * dedup/containment/cluster pass reads the materialized table —
-    * tokenization is the family's shared scan-time cost, not a per-query
-    * one. Results are identical by construction (same [[shinglesOf]]
-    * output, stored losslessly); the default stays the direct path so
-    * the oracle gates pin the canonical computation. Suite delta measured
-    * in BENCHNOTES. */
+  /** (doc_id, shingles) over the whole corpus (d4/d5/d13/d18/t8). */
   private[queries] def withShingles(s: SparkSession, d: String): DataFrame =
-    s.conf.getOption("graft.dedup.shingleDir").filter(_.nonEmpty) match {
-      case None => computedShingles(s, d)
-      case Some(cfg) =>
-        // The conf names a BASE directory ("auto" = the warehouse); the
-        // layout name carries the corpus tag, so one session touching two
-        // corpora can never be served the wrong corpus's shingles (an
-        // untagged explicit path once passed its freshness check for EVERY
-        // dataset after the first).
-        val root = if (cfg == "auto") s.conf.get("spark.sql.warehouse.dir") else cfg
-        val lay = Tables.derivedLayout(s, root, "shingles", d, Seq("documents")) { dir =>
-          computedShingles(s, d).write.mode("overwrite").parquet(dir.toString)
-          ""
-        }
-        Tables.parquet(s, lay.dir.toString)
-    }
+    shingled[Long, (Long, Seq[String])](s, d, "doc_id", lit(true), "doc_id", "shingles")(
+      () => (_, _))
+
+  /** Exploded (`key`, sh) rows of the documents `pred` selects: d8/d11/p2/
+    * p4/p6 split on doc_id, d16/d16_scale key on source. Pairs are
+    * distinct per document by construction (shinglesOf de-dups). */
+  private def shingleKeys[K: TypeTag](s: SparkSession, d: String, key: String,
+      pred: Column): DataFrame =
+    shingled[K, (K, Seq[String])](s, d, key, pred, key, "shingles")(() => (_, _))
+      .select(col(key), explode(col("shingles")).as("sh"))
+
+  /** The eval split (source 'src0') and the train split (every other
+    * non-null source) of the decontamination family. */
+  private val EvalSplit: Column = col("source") === "src0"
+  private val TrainSplit: Column = col("source").isNotNull && col("source") =!= "src0"
+  /** The training write's quality gate: train split, ≥ 5 whitespace tokens. */
+  private val TrainGate: Column = TrainSplit && size(TextOps.wsTokens(col("text"))) >= 5
 
   /** 1-row (df_cap: int) frame for the shingle-family postings cap
     * (d5/d13/d16). r11: the cap is a corpus FRACTION with an absolute
@@ -373,11 +341,9 @@ object Dedup {
     // the checkpoint 8% SLOWER there (d13 52.0 → 56.5 s min-of-3:
     // materializing ~14M posting entries costs more than the duplicate
     // pass once the data outweighs the per-job overhead), while sf0.1 is
-    // 34% faster (2.40 → 1.59 s). Past the threshold the production
-    // answer to re-shingling is the provisioned `graft.dedup.shingleDir`
-    // table, not an in-memory checkpoint. Threshold on the compressed
-    // documents bytes (the parallelized() probe): 4 MB (sf0.1's 0.6 MB ✓,
-    // sf1's 6 MB ✗ — both measured above).
+    // 34% faster (2.40 → 1.59 s). Threshold on the compressed documents
+    // bytes (the parallelized() probe): 4 MB (sf0.1's 0.6 MB ✓, sf1's
+    // 6 MB ✗ — both measured above).
     val postings0 = withShingles(s, d)
       .select(struct(col("doc_id"),
           size(col("shingles")).cast("bigint").as("n_sh")).as("doc"),
@@ -396,23 +362,54 @@ object Dedup {
     }
     val postings =
       if (docBytes < (4L << 20)) postings0.localCheckpoint(true) else postings0
-    val est = postings.agg(sum(expr(
-      "CAST(size(ds) AS DECIMAL(38,0)) * CAST(size(ds) - 1 AS DECIMAL(38,0)) / 2"))
-      .as("__cand"))
-    postings.crossJoin(broadcast(est))
-      .filter(when(col("__cand") > effCap, raise_error(format_string(
-        s"$name: ~%s candidate pairs from the DF <= %s postings exceed the " +
-          s"guard (volume cap graft.dedup.d5MaxCandidates=%s; time model " +
-          s"~%s s predicted at graft.dedup.pairsPerSec=%s vs " +
-          s"graft.dedup.pairBudgetSec=%s); exact n-gram pair enumeration " +
-          "is quadratic on this corpus density -- use d3_dedup_minhash/d10 " +
-          "or the banded d5_scale/d9_scale/d17_scale twins (bounded " +
-          "candidates, the production path) at this scale, or raise the " +
-          "caps explicitly",
-        col("__cand"), col("df_cap"), lit(maxCand),
-        round(col("__cand") / pairsPerSec).cast("bigint"),
-        lit(pairsPerSec.toLong), lit(budgetSec)))).isNull)
-      .drop("__cand")
+    guarded(postings, postings.agg(pairCount("size(ds)")), Nil, effCap)(format_string(
+      s"$name: ~%s candidate pairs from the DF <= %s postings exceed the " +
+        s"guard (volume cap graft.dedup.d5MaxCandidates=%s; time model " +
+        s"~%s s predicted at graft.dedup.pairsPerSec=%s vs " +
+        s"graft.dedup.pairBudgetSec=%s); exact n-gram pair enumeration " +
+        "is quadratic on this corpus density -- use d3_dedup_minhash/d10 " +
+        "or the banded d5_scale/d9_scale/d17_scale twins (bounded " +
+        "candidates, the production path) at this scale, or raise the " +
+        "caps explicitly",
+      col("__cand"), col("df_cap"), lit(maxCand),
+      round(col("__cand") / pairsPerSec).cast("bigint"),
+      lit(pairsPerSec.toLong), lit(budgetSec)))
+  }
+
+  /** The candidate-volume guard of d5/d6/d7/d13/d5_scale: `est` carries
+    * the `on` keys (none: one row) and one estimate column, and is
+    * broadcast-joined to `rows`; a row whose estimate exceeds `cap` fails
+    * the job with `msg` BEFORE any pair is generated. Lazy and
+    * distributed: on healthy data the filter is never true. */
+  private def guarded(rows: DataFrame, est: DataFrame, on: Seq[String], cap: Long)(
+      msg: Column): DataFrame = {
+    val n = est.columns.filterNot(on.contains).head
+    (if (on.isEmpty) rows.crossJoin(broadcast(est)) else rows.join(broadcast(est), on))
+      .filter(when(col(n) > cap, raise_error(msg)).isNull)
+      .drop(n)
+  }
+
+  /** Σ C(n, 2) over the groups of size `n` — the exact candidate-pair
+    * count a bucket or posting list expands to. Both factors ride
+    * DECIMAL(38,0): n*(n-1) in BIGINT wraps (non-ANSI) once a group holds
+    * ~3e9 rows, exactly the density regime the guard exists to catch (the
+    * e22 overflow lesson). */
+  private def pairCount(n: String): Column =
+    sum(expr(s"CAST($n AS DECIMAL(38,0)) * CAST($n - 1 AS DECIMAL(38,0)) / 2")).as("__cand")
+
+  /** The d5/d13 pair aggregate: every doc pair sharing a kept posting
+    * list, with both set sizes and the shared-shingle count `inter`. The
+    * pair columns are named `names` (a, b, n_a, n_b); `carry` columns
+    * ride along and group last. */
+  private def postingPairs(postings: DataFrame, names: Seq[String], carry: Column*): DataFrame = {
+    val Seq(a, b, na, nb) = names
+    postings
+      .select(carry :+ explode(col("ds")).as("a") :+ col("ds"): _*)
+      .select(carry :+ col("a") :+ explode(col("ds")).as("b"): _*)
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .groupBy(Seq(col("a.doc_id").as(a), col("b.doc_id").as(b),
+        col("a.n_sh").as(na), col("b.n_sh").as(nb)) ++ carry: _*)
+      .agg(count(lit(1)).as("inter"))
   }
 
   /** Converged min-label propagation over the d5 near-dup pair graph —
@@ -496,21 +493,10 @@ object Dedup {
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
-  /** (doc_id, shingles, banded MinHash signature) in ONE narrow pass: the
-    * signature is a per-document reduction, so the naive explode →
-    * groupBy(doc_id) formulation would shuffle the whole shingle corpus for
-    * nothing. Hash bits are identical to the SQL `xxhash64(lit(i), shingle)`
-    * / `xxhash64(slice(sig, …))` forms (seed 42, same int→bytes
-    * accumulation), so buckets are deterministic across engines/runs.
-    * `pred` is applied BELOW the typed map (which is an optimizer barrier):
-    * callers splitting the corpus (d10) push their split predicate into the
-    * parquet scan and pay the shingle pass only for their slice. */
   /** Banded MinHash signature of one shingle set. Seed i is a pure
     * function of the INDEX, so the signature prefix [0, 32) is
     * bit-identical across every geometry (d3's 8×4 codes are unchanged by
-    * d5_scale asking for a longer signature), and the signature of a
-    * MATERIALIZED shingle set equals the one computed inline from text
-    * (the `graft.dedup.shingleDir` path changes no bits). */
+    * d5_scale asking for a longer signature). */
   private def bandSignature(shingles: Seq[String], seeds: Array[Long],
       bands: Int, bandsPerDoc: Int): Array[Long] = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
@@ -534,52 +520,70 @@ object Dedup {
     }
   }
 
+  /** (doc_id, shingles, banded MinHash signature) in ONE narrow pass: the
+    * signature is a per-document reduction, so the naive explode →
+    * groupBy(doc_id) formulation would shuffle the whole shingle corpus for
+    * nothing. Hash bits are identical to the SQL `xxhash64(lit(i), shingle)`
+    * / `xxhash64(slice(sig, …))` forms (seed 42, same int→bytes
+    * accumulation), so buckets are deterministic across engines/runs.
+    * `pred` is applied BELOW the typed map (which is an optimizer barrier):
+    * callers splitting the corpus (d10) push their split predicate into the
+    * parquet scan and pay the shingle pass only for their slice. */
   private def bandedSets(s: SparkSession, d: String, pred: Column,
       bands: Int = BANDS, numHashes: Int = NUM_HASHES): DataFrame = {
-    import s.implicits._
     require(numHashes % bands == 0, s"$numHashes hashes do not band into $bands")
     val bandsPerDoc = numHashes / bands
-    def seeds() = {
-      import org.apache.spark.sql.catalyst.expressions.XXH64
-      Array.tabulate(numHashes)(i => XXH64.hashInt(i, 42L))
-    }
-    if (s.conf.getOption("graft.dedup.shingleDir").exists(_.nonEmpty)) {
-      // Materialized shingle table: signatures from the stored sets, no
-      // re-tokenization. Callers' preds reference only doc_id (d10's
-      // split) or are `lit(true)` — both valid against this schema.
-      withShingles(s, d).filter(pred)
-        .as[(Long, Seq[String])]
-        .mapPartitions { it =>
-          val sd = seeds()
-          it.map { case (id, shingles) =>
-            (id, shingles, bandSignature(shingles, sd, bands, bandsPerDoc))
-          }
-        }
-        .toDF("doc_id", "shingles", "bands")
-    } else {
-      // Direct path: shingles AND signature in ONE fused map over the
-      // text scan — no intermediate encoding between tokenize and sign.
-      Tables.parallelized(Tables.validDocuments(s, d))
-        .filter(pred)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          val sd = seeds()
-          it.map { case (id, text) =>
-            val shingles = shinglesOf(text)
-            (id, shingles, bandSignature(shingles, sd, bands, bandsPerDoc))
-          }
-        }
-        .toDF("doc_id", "shingles", "bands")
+    shingled[Long, (Long, Seq[String], Array[Long])](s, d, "doc_id", pred,
+        "doc_id", "shingles", "bands") { () =>
+      val seeds = Array.tabulate(numHashes)(i =>
+        org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(i, 42L))
+      (id, shingles) => (id, shingles, bandSignature(shingles, seeds, bands, bandsPerDoc))
     }
   }
+
+  private val BandKeys = Seq("band", "band_sig")
+
+  /** (doc_id, band, band_sig): one row per band bucket a document sits in. */
+  private def bandBuckets(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), posexplode(col("bands")).as(BandKeys))
 
   /** (doc_id, band, band_sig) bucket-membership rows — d3/d10's banding
     * exposed as the input stream for `streaming.BandIndexProcessor` (the
     * continuous-ingestion near-dup index); one definition, so the batch
     * and streaming band universes cannot drift. */
   private[graft] def bandRows(s: SparkSession, d: String): DataFrame =
-    bandedSets(s, d, lit(true)).select(col("doc_id"),
-      posexplode(col("bands")).as(Seq("band", "band_sig")))
+    bandBuckets(bandedSets(s, d, lit(true)))
+
+  /** The bucket-candidate join of the LSH family (d3/d5_scale/d10 band
+    * buckets, d7 sign-code buckets): rows of `a` and `b` sharing every
+    * `keys` bucket column pair up as (outA, outB) = their `id`s, each pair
+    * once. `ordered` keeps a < b (a self-join); a cross-split join
+    * keeps every pair. */
+  private def bucketPairs(a: DataFrame, b: DataFrame, keys: Seq[String], id: String,
+      outA: String, outB: String, ordered: Boolean = true): DataFrame = {
+    val same = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    a.as("a").join(b.as("b"), if (ordered) same && col(s"a.$id") < col(s"b.$id") else same)
+      .select(col(s"a.$id").as(outA), col(s"b.$id").as(outB))
+      .distinct()
+  }
+
+  /** Exact-Jaccard verification of candidate pairs: each side's shingle
+    * set rejoins on its id (the candidates' two columns, `setsA` and
+    * `setsB` keyed on doc_id), pairs below `threshold` drop, and `cols`
+    * are kept, ordered by the pair. */
+  private def jaccardVerified(cands: DataFrame, setsA: DataFrame, setsB: DataFrame,
+      threshold: Double, cols: String*): DataFrame = {
+    val Array(a, b) = cands.columns
+    cands
+      .join(setsA.select(col("doc_id").as(a), col("shingles").as("sh_a")), a)
+      .join(setsB.select(col("doc_id").as(b), col("shingles").as("sh_b")), b)
+      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("bigint"))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(cols.map(col): _*)
+      .orderBy(col(a), col(b))
+  }
 
   /** xxhash64-compatible string hash (same bits as the SQL `xxhash64`). */
   private[queries] def xxh64(s: String, seed: Long = 42L): Long = {
@@ -607,42 +611,52 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** 64-bit SimHash signatures with MD5-derived bits, the d4_oracled hash
-    * family: bit k of a shingle's hash is bit (k % 4) of hex nibble
-    * (k / 4) of md5(shingle) — the NIBBLE-ORDER definition, chosen because
-    * the SQL twin can mirror it with substr/strpos arithmetic on the hex
-    * string, no 64-bit unsigned parsing (DuckDB BIGINT is signed and the
-    * top hex digit of an md5 prefix overflows it). */
-  private def md5SimhashSketches(s: SparkSession, d: String): DataFrame = {
+  /** (doc_id, simhash): each document's 64-bit SimHash over its shingles,
+    * bit i = the sign of Σ ±(bit i of `hash(shingle)`), computed per row
+    * in typed Scala (the fold is a tight bit loop; the interpreted-HOF
+    * version was two orders of magnitude slower). `hash` is built once
+    * per partition. */
+  private def simhashSketches(s: SparkSession, d: String,
+      hash: () => String => Long): DataFrame = {
     import s.implicits._
     withShingles(s, d)
       .select(col("doc_id"), col("shingles")).as[(Long, Seq[String])]
       .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
+        val h = hash()
         it.map { case (id, shingles) =>
           val counts = new Array[Int](64)
           shingles.foreach { sh =>
-            val dig = md.digest(sh.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            var j = 0
-            while (j < 16) { // hex char j = high (even j) or low nibble of byte j/2
-              val b = dig(j >> 1) & 0xff
-              val v = if ((j & 1) == 0) b >>> 4 else b & 0xf
-              var t = 0
-              while (t < 4) {
-                if (((v >>> t) & 1) == 1) counts(4 * j + t) += 1
-                else counts(4 * j + t) -= 1
-                t += 1
-              }
-              j += 1
-            }
+            val x = h(sh)
+            var i = 0
+            while (i < 64) { if (((x >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1; i += 1 }
           }
           var sim = 0L
-          var k = 0
-          while (k < 64) { if (counts(k) > 0) sim |= 1L << k; k += 1 }
+          var j = 0
+          while (j < 64) { if (counts(j) > 0) sim |= 1L << j; j += 1 }
           (id, sim)
         }
       }
       .toDF("doc_id", "simhash")
+  }
+
+  /** The d4_oracled shingle hash: bit k is bit (k % 4) of hex nibble
+    * (k / 4) of md5(shingle) — the NIBBLE-ORDER definition, chosen because
+    * the SQL twin can mirror it with substr/strpos arithmetic on the hex
+    * string, no 64-bit unsigned parsing (DuckDB BIGINT is signed and the
+    * top hex digit of an md5 prefix overflows it). */
+  private def md5NibbleBits(): String => Long = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    sh => {
+      val dig = md.digest(sh.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      var x = 0L
+      var j = 0
+      while (j < 16) { // hex char j = high (even j) or low nibble of byte j/2
+        val b = dig(j >> 1) & 0xff
+        x |= (if ((j & 1) == 0) b >>> 4 else b & 0xf).toLong << (4 * j)
+        j += 1
+      }
+      x
+    }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -677,50 +691,18 @@ object Dedup {
       // point and starves the rest of the session) — in a real pipeline
       // the shingle table would be materialized once upstream.
       val sets = bandedSets(s, d, lit(true))
-      // banding: (band index, band signature) buckets.
-      val banded = sets.select(col("doc_id"),
-          posexplode(col("bands")).as(Seq("band", "band_sig")))
-      val cands = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
+      val banded = bandBuckets(sets)
       // exact-Jaccard verification on candidates only.
-      cands
-        .join(sets.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
-        .join(sets.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("bigint"))
-        .withColumn("jaccard", col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-        .filter(col("jaccard") >= 0.9)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
+      jaccardVerified(bucketPairs(banded, banded, BandKeys, "doc_id", "doc_a", "doc_b"),
+        sets, sets, 0.9, "doc_a", "doc_b", "jaccard")
     },
-    // SimHash sketches: 64-bit signature per document, computed per-row in
-    // typed Scala (the fold is a tight bit loop; the interpreted-HOF version
-    // was two orders of magnitude slower). Hashes are over shingles, not
-    // words: with a small vocabulary nearly every document contains every
-    // word, so word-set sketches collapse to a handful of values and the
-    // band join goes quadratic; 3-gram shingles keep the sketch
-    // discriminative.
+    // SimHash sketches: 64-bit signature per document (simhashSketches).
+    // Hashes are over shingles, not words: with a small vocabulary nearly
+    // every document contains every word, so word-set sketches collapse to
+    // a handful of values and the band join goes quadratic; 3-gram
+    // shingles keep the sketch discriminative.
     "d4_dedup_simhash" -> { (s, d) =>
-      import s.implicits._
-      val sk = withShingles(s, d)
-        .select(col("doc_id"), col("shingles")).as[(Long, Seq[String])]
-        .mapPartitions(_.map { case (id, shingles) =>
-          val counts = new Array[Int](64)
-          shingles.foreach { sh =>
-            val h = xxh64(sh)
-            var i = 0
-            while (i < 64) { if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1; i += 1 }
-          }
-          var sim = 0L
-          var j = 0
-          while (j < 64) { if (counts(j) > 0) sim |= 1L << j; j += 1 }
-          (id, sim)
-        })
-        .toDF("doc_id", "simhash")
-      simhashPairs(sk)
+      simhashPairs(simhashSketches(s, d, () => sh => xxh64(sh)))
     },
     // d4's ORACLE TWIN: the identical SimHash pipeline (64-bit signature,
     // 4×16-bit chunk banding, Hamming ≤ 3) with the hash family swapped
@@ -730,7 +712,7 @@ object Dedup {
     // pattern applied to the SimHash family). d4 itself stays the
     // production entry (xxh64 is ~20× cheaper than MD5 per shingle); this
     // twin certifies the shared pair machinery.
-    "d4_oracled" -> { (s, d) => simhashPairs(md5SimhashSketches(s, d)) },
+    "d4_oracled" -> { (s, d) => simhashPairs(simhashSketches(s, d, () => md5NibbleBits())) },
     // n-gram (word-3-gram) Jaccard over the DF-capped shingle vocabulary,
     // postings-list form: ONE shingle pass, groupBy(shingle) → bounded doc
     // list, pairs expanded from each list. The document-frequency cap is structural — a posting list
@@ -750,15 +732,8 @@ object Dedup {
     // — at other DF distributions the capped result is a recall-bounded
     // approximation, not the exact pair set.
     "d5_ngram_jaccard" -> { (s, d) =>
-      val postings = cappedGuardedPostings(s, d, "d5_ngram_jaccard")
-      val pairs = postings
-        .select(col("df_cap"), explode(col("ds")).as("a"), col("ds"))
-        .select(col("df_cap"), col("a"), explode(col("ds")).as("b"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          col("a.n_sh").as("na"), col("b.n_sh").as("nb"), col("df_cap"))
-        .agg(count(lit(1)).as("inter"))
-      pairs
+      postingPairs(cappedGuardedPostings(s, d, "d5_ngram_jaccard"),
+          Seq("doc_a", "doc_b", "na", "nb"), col("df_cap"))
         .withColumn("jaccard", col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")).cast("double"))
         .filter(col("jaccard") >= 0.3)
@@ -800,8 +775,7 @@ object Dedup {
       val (nb, nr) = d5ScaleGeometry(0.85, 0.99999)
       val sets = bandedSets(s, d, lit(true), bands = nb, numHashes = nb * nr)
         .localCheckpoint(true)
-      val buckets = sets.select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band", "band_sig")))
+      val buckets = bandBuckets(sets)
       // Bucket-occupancy guard (the d7 idiom on MINHASH buckets): LSH
       // assumes vocabulary grows with the corpus. When it doesn't —
       // GenData keeps ~28k shingle types at every SF — the globally
@@ -816,32 +790,16 @@ object Dedup {
         .map(_.toLong).getOrElse(500000000L)
       val est = buckets.groupBy(col("band"), col("band_sig"))
         .agg(count(lit(1)).as("bn"))
-        .agg(sum(expr(
-          "CAST(bn AS DECIMAL(38,0)) * CAST(bn - 1 AS DECIMAL(38,0)) / 2"))
-          .as("__cand"))
-      val guarded = buckets.crossJoin(broadcast(est))
-        .filter(when(col("__cand") > maxCand, raise_error(format_string(
-          "d5_scale: ~%s banded candidate pairs exceed " +
-            "graft.dedup.d5MaxCandidates=%s; minhash buckets degenerate when " +
-            "the shingle vocabulary does not grow with the corpus " +
-            "(BENCHNOTES r11) -- shard by source/time before pairing at this " +
-            "density, or raise the cap explicitly",
-          col("__cand"), lit(maxCand)))).isNull)
-        .drop("__cand")
-      val cands = guarded.as("a").join(buckets.as("b"),
-          col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      cands
-        .join(sets.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
-        .join(sets.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), "doc_b")
-        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("bigint"))
-        .withColumn("jaccard", col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-        .filter(col("jaccard") >= 0.3)
-        .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
+        .agg(pairCount("bn"))
+      val admitted = guarded(buckets, est, Nil, maxCand)(format_string(
+        "d5_scale: ~%s banded candidate pairs exceed " +
+          "graft.dedup.d5MaxCandidates=%s; minhash buckets degenerate when " +
+          "the shingle vocabulary does not grow with the corpus " +
+          "(BENCHNOTES r11) -- shard by source/time before pairing at this " +
+          "density, or raise the cap explicitly",
+        col("__cand"), lit(maxCand)))
+      jaccardVerified(bucketPairs(admitted, buckets, BandKeys, "doc_id", "doc_a", "doc_b"),
+        sets, sets, 0.3, "doc_a", "doc_b", "inter", "jaccard")
     },
     // Embedding-cosine near-dup, blocked by the natural `label` partition so
     // the pair join is per-block, not corpus-quadratic. This is the EXACT
@@ -860,16 +818,12 @@ object Dedup {
     "d6_embedding_neardup" -> { (s, d) =>
       import graft.functions.VecFunctions.vec_dot
       val maxBlock = s.conf.getOption("graft.dedup.maxExactBlock").map(_.toInt).getOrElse(20000)
-      val e0 = Tables.parallelized(Tables.validEmbeddings(s, d)).select(col("vec_id"), col("label"),
-        col("embedding"),
-        vec_dot(col("embedding"), col("embedding")).as("sq"))
+      val e0 = Similarity.normed(s, d)
       val sizes = e0.groupBy(col("label")).agg(count(lit(1)).as("__block_n"))
-      val e = e0.join(broadcast(sizes), "label")
-        .filter(when(col("__block_n") > maxBlock, raise_error(format_string(
-          "d6_embedding_neardup: label %s has %s vectors > graft.dedup.maxExactBlock=%s; " +
-            "use d7_embedding_neardup_lsh (bounded candidates) at this scale",
-          col("label"), col("__block_n"), lit(maxBlock)))).isNull)
-        .drop("__block_n")
+      val e = guarded(e0, sizes, Seq("label"), maxBlock)(format_string(
+        "d6_embedding_neardup: label %s has %s vectors > graft.dedup.maxExactBlock=%s; " +
+          "use d7_embedding_neardup_lsh (bounded candidates) at this scale",
+        col("label"), col("__block_n"), lit(maxBlock)))
       e.as("a").join(e.as("b"),
           col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
         .withColumn("dot", vec_dot(col("a.embedding"), col("b.embedding")))
@@ -886,8 +840,9 @@ object Dedup {
     // size — so the join is test-shingles × {0,1} membership, never a
     // doc-pair explosion; the groupBy then counts per test doc.
     "d8_decontaminate" -> { (s, d) =>
-      val train = splitShingles(s, d, col("source") =!= "src0").select(col("sh")).distinct()
-      splitShingles(s, d, col("source") === "src0")
+      val train = shingleKeys[Long](s, d, "doc_id", col("source") =!= "src0")
+        .select(col("sh")).distinct()
+      shingleKeys[Long](s, d, "doc_id", EvalSplit)
         .join(train, "sh")
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("sh")).as("n_shared"))
@@ -899,9 +854,9 @@ object Dedup {
     // as d8 (membership left-join, no pair explosion); uncontaminated docs
     // surface with score 0 so a threshold sweep sees the whole split.
     "d11_contamination_score" -> { (s, d) =>
-      val train = splitShingles(s, d, col("source") =!= "src0")
+      val train = shingleKeys[Long](s, d, "doc_id", col("source") =!= "src0")
         .select(col("sh")).distinct().withColumn("hit", lit(1))
-      splitShingles(s, d, col("source") === "src0")
+      shingleKeys[Long](s, d, "doc_id", EvalSplit)
         .join(train, Seq("sh"), "left")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_shingles"), count(col("hit")).as("n_shared"))
@@ -962,42 +917,23 @@ object Dedup {
       val isNew = col("doc_id") % 5 === 0
       val newSets = bandedSets(s, d, isNew)
       val corpusSets = bandedSets(s, d, !isNew)
-      def explodeBands(df: DataFrame) = df.select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band", "band_sig")))
-      val cands = explodeBands(newSets).as("a")
-        .join(explodeBands(corpusSets).as("b"),
-          col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig"))
-        .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("dup_of"))
-        .distinct()
-      cands
-        .join(newSets.select(col("doc_id").as("new_id"), col("shingles").as("sh_a")), "new_id")
-        .join(corpusSets.select(col("doc_id").as("dup_of"), col("shingles").as("sh_b")), "dup_of")
-        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("bigint"))
-        .withColumn("jaccard", col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-        .filter(col("jaccard") >= 0.9)
-        .select(col("new_id"), col("dup_of"), col("jaccard"))
-        .orderBy(col("new_id"), col("dup_of"))
+      val cands = bucketPairs(bandBuckets(newSets), bandBuckets(corpusSets), BandKeys,
+        "doc_id", "new_id", "dup_of", ordered = false)
+      jaccardVerified(cands, newSets, corpusSets, 0.9, "new_id", "dup_of", "jaccard")
     },
     // The 100 TB path for d6: sign-LSH bucketing WITHIN label bounds the
     // candidate set (a block of size n yields ~L·n²/2^k candidates instead
     // of n²), exact cosine verification keeps precision at 1.0; recall vs
     // the exact d6 is pinned in DedupSpec (hash-defined buckets ⇒ rows-only
     // under the driver contract, like s2). Geometry is threshold-
-    // conditioned (see d7Geometry above): the default conf reproduces
+    // conditioned (see d7Geometry above): θ=0.3 at target 0.85 reproduces
     // r10's fixed (4 bits, 16 tables) bit-for-bit; the high-density
-    // production config is d7Threshold=0.8 / d7TargetRecall=0.9 → 8-bit
+    // production geometry is signLshPairs at θ=0.8 / target 0.9 → 8-bit
     // tables, recall-pinned ≥0.9 on DedupSpec's planted clusters and
     // guard-green at sf100 density (BENCHNOTES r11).
     "d7_embedding_neardup_lsh" -> { (s, d) =>
-      import graft.functions.VecFunctions.vec_dot
-      val threshold = s.conf.getOption("graft.dedup.d7Threshold").map(_.toDouble).getOrElse(0.3)
-      val tables = s.conf.getOption("graft.dedup.d7Tables").map(_.toInt).getOrElse(D7_TABLES)
-      val target = s.conf.getOption("graft.dedup.d7TargetRecall").map(_.toDouble).getOrElse(0.85)
-      val e = Tables.parallelized(Tables.validEmbeddings(s, d)).select(col("vec_id"), col("label"),
-        col("embedding"),
-        vec_dot(col("embedding"), col("embedding")).as("sq"))
-      signLshPairs(s, e, threshold, tables, d7Geometry(threshold, tables, target))
+      signLshPairs(s, Similarity.normed(s, d), D7_THRESHOLD, D7_TABLES,
+        d7Geometry(D7_THRESHOLD, D7_TABLES, D7_TARGET_RECALL))
     },
     // d7's hash-oracled exhaustive twin (the s2/s4/s13 pattern): 1 table x
     // 0 bits puts every vector of a label in ONE bucket, so the candidate
@@ -1008,13 +944,7 @@ object Dedup {
     // The production d7 entry stays rows-only beside it (its buckets are
     // hash-defined); this twin is the contract that the kernel's recall
     // losses come from the geometry alone.
-    "d7_exhaustive" -> { (s, d) =>
-      import graft.functions.VecFunctions.vec_dot
-      val e = Tables.parallelized(Tables.validEmbeddings(s, d)).select(col("vec_id"), col("label"),
-        col("embedding"),
-        vec_dot(col("embedding"), col("embedding")).as("sq"))
-      signLshPairs(s, e, 0.3, 1, 0)
-    },
+    "d7_exhaustive" -> { (s, d) => signLshPairs(s, Similarity.normed(s, d), 0.3, 1, 0) },
     // Semantic dedup (the SemDeDup recipe: cluster, keep one representative,
     // drop members too similar to it): per label cluster, the MEDOID is the
     // vector most aligned with the cluster centroid (s5/s6's order-free
@@ -1030,9 +960,7 @@ object Dedup {
     // corpus; no pairwise explosion anywhere (SemDeDup's point vs d6).
     "d15_semdedup" -> { (s, d) =>
       import graft.functions.VecFunctions.vec_dot
-      val e = Tables.parallelized(Tables.validEmbeddings(s, d)).select(
-        col("vec_id"), col("label"), col("embedding"),
-        vec_dot(col("embedding"), col("embedding")).as("sq"))
+      val e = Similarity.normed(s, d)
       val cent = Similarity.centroidVecs(s, d)
       // Zero-centroid guard (s5's case): a label's exact component sums can
       // cancel to the zero vector, so the centroid-side norm can be 0 even
@@ -1105,13 +1033,7 @@ object Dedup {
       // emit the two orientations afterwards from the pair-level rows
       // (a cheap map-side union, no second shuffle). Same result set,
       // ~2× less pair traffic — the dominant cost of the exact family.
-      val pairs = postings
-        .select(explode(col("ds")).as("a"), col("ds"))
-        .select(col("a"), explode(col("ds")).as("b"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"),
-          col("a.n_sh").as("nsa"), col("b.n_sh").as("nsb"))
-        .agg(count(lit(1)).as("inter"))
+      val pairs = postingPairs(postings, Seq("ida", "idb", "nsa", "nsb"))
       // r17 (§1.2 don't recompute): the two orientations were a UNION of
       // two projections of `pairs`, and the executed plan showed the WHOLE
       // quadratic pair expansion + count aggregate running twice — the
@@ -1180,14 +1102,9 @@ object Dedup {
     // before relying on equality. INNER-join semantics: source pairs
     // sharing zero capped shingles have no row.
     "d16_source_overlap" -> { (s, d) =>
-      import s.implicits._
       val cap = dfCapFrame(s, d)
-      val postings = Tables.parallelized(Tables.validDocuments(s, d))
-        .select(col("source"), col("text")).as[(String, String)]
-        .mapPartitions(_.map { case (src, t) => (src, shinglesOf(t)) })
-        .toDF("source", "shingles")
-        // shinglesOf de-dups within a doc, so count(*) here IS doc-DF.
-        .select(col("source"), explode(col("shingles")).as("sh"))
+      // shinglesOf de-dups within a doc, so count(*) here IS doc-DF.
+      val postings = shingleKeys[String](s, d, "source", lit(true))
         .groupBy(col("sh"))
         .agg(count(lit(1)).as("df"), collect_set(col("source")).as("srcs"))
         .crossJoin(broadcast(cap))
@@ -1227,14 +1144,9 @@ object Dedup {
     // verify SF vs k = 16,384) — the exact SQL is the oracle; above k the
     // q58 estimator bounds apply (SketchSpec).
     "d16_scale" -> { (s, d) =>
-      import s.implicits._
       val k = s.conf.get("spark.graft.sketch.k", "16384").toInt
       val sk = udaf(graft.functions.Sketches.KmvSketch(k))
-      val sketches = Tables.parallelized(Tables.validDocuments(s, d))
-        .select(col("source"), col("text")).as[(String, String)]
-        .mapPartitions(_.map { case (src, t) => (src, shinglesOf(t)) })
-        .toDF("source", "shingles")
-        .select(col("source"), explode(col("shingles")).as("sh"))
+      val sketches = shingleKeys[String](s, d, "source", lit(true))
         .select(col("source"), xxhash64(col("sh")).as("h"))
         .groupBy(col("source")).agg(sk(col("h")).as("sk"))
         // |sources| rows of ≤ k longs; both sides of the pair join read it
@@ -1376,24 +1288,7 @@ object Dedup {
     // contaminated-id set is smaller still; the corpus is scanned once
     // for the gate+dedup chain and once inside the shingle kernel.
     "p2_pretrain_shards" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val trainPred = col("source").isNotNull && col("source") =!= "src0"
-      val gated = Tables.validDocuments(s, d)
-        .filter(trainPred && size(TextOps.wsTokens(col("text"))) >= 5)
-      val deduped = gated
-        .withColumn("rn",
-          row_number().over(Window.partitionBy(col("text")).orderBy(col("doc_id"))))
-        .filter(col("rn") === 1)
-      val evalSh = splitShingles(s, d, col("source") === "src0")
-        .select(col("sh")).distinct()
-      val contaminated = splitShingles(s, d, trainPred)
-        .join(evalSh, "sh").select(col("doc_id")).distinct()
-      deduped.join(contaminated, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("n_chars"),
-          size(TextOps.wsTokens(col("text"))).cast("bigint").as("n_tokens"),
-          md5(col("doc_id").cast("string").cast("binary")).as("h"))
-        .withColumn("shard",
-          expr("CAST(instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS INT)"))
+      TextOps.shardRows(cleanTrain(s, d))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tokens")).cast("bigint").as("n_tokens"),
@@ -1423,19 +1318,18 @@ object Dedup {
     // p2's full-recompute SQL VERBATIM — hash equality certifies the
     // whole maintenance identity for an arbitrary split. Scale shape:
     // delta dedup and both decontam passes are index probes (the text
-    // hash and shingle structures are provision-once — the
-    // `graft.dedup.shingleDir` layout); retro touches vintage ROWS only
-    // through the shingle-hit id set, never a vintage rescan.
+    // hash and shingle structures are provision-once in production);
+    // retro touches vintage ROWS only through the shingle-hit id set,
+    // never a vintage rescan.
     "p4_incremental_pretrain" -> { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val trainPred = col("source").isNotNull && col("source") =!= "src0"
       val b = Tables.validDocuments(s, d)
         .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head
       val cut = if (b.isNullAt(0)) Long.MinValue
         else b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2
       val pre = col("doc_id") <= lit(cut)
       val g = Tables.validDocuments(s, d)
-        .filter(trainPred && size(TextOps.wsTokens(col("text"))) >= 5)
+        .filter(TrainGate)
         .select(col("doc_id"), col("text"), col("n_chars"), pre.as("pre"))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("text")).orderBy(col("doc_id"))))
@@ -1450,7 +1344,7 @@ object Dedup {
       // untouched. The eval flag table is localCheckpointed: it is
       // eval-split-sized (small by construction, d8's argument) and feeds
       // the membership join.
-      val evalSh = splitShingles(s, d, col("source") === "src0")
+      val evalSh = shingleKeys[Long](s, d, "doc_id", EvalSplit)
         .groupBy(col("sh"))
         .agg(max(pre).as("hasPre"), max(!pre).as("hasNew"))
         .localCheckpoint(true)
@@ -1471,7 +1365,7 @@ object Dedup {
       //                 in the set; flags are irrelevant there)
       // — so the manifest identity and the verbatim p2-recompute oracle
       // are untouched; the train corpus pays ONE shingle pass total.
-      val hits = splitShingles(s, d, trainPred)
+      val hits = shingleKeys[Long](s, d, "doc_id", TrainSplit)
         .join(evalSh, "sh")
         .groupBy(col("doc_id"))
         .agg(max(col("hasPre")).as("hitPre"), max(col("hasNew")).as("hitNew"))
@@ -1485,11 +1379,7 @@ object Dedup {
         .join(hits.filter(pre && col("hitNew")).select(col("doc_id")),
           Seq("doc_id"), "left_semi")
       def manifest(df: DataFrame, sgn: Long): DataFrame =
-        df.select(col("doc_id"), col("n_chars"),
-          size(TextOps.wsTokens(col("text"))).cast("bigint").as("n_tokens"),
-          md5(col("doc_id").cast("string").cast("binary")).as("h"))
-          .withColumn("shard",
-            expr("CAST(instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS INT)"))
+        TextOps.shardRows(df)
           .groupBy(col("shard"))
           .agg((lit(sgn) * count(lit(1))).as("n_docs"),
             (lit(sgn) * sum(col("n_tokens"))).as("n_tokens"),
@@ -1558,25 +1448,12 @@ object Dedup {
     // window-count exchange and the islands' doc_id window); the
     // manifest is a 16-group aggregate; nothing is corpus-quadratic.
     "p6_substr_pretrain" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val K = SubstrK
-      val trainPred = col("source").isNotNull && col("source") =!= "src0"
-      val gated = Tables.validDocuments(s, d)
-        .filter(trainPred && size(TextOps.wsTokens(col("text"))) >= 5)
-      val deduped = gated
-        .withColumn("rn",
-          row_number().over(Window.partitionBy(col("text")).orderBy(col("doc_id"))))
-        .filter(col("rn") === 1)
-      val evalSh = splitShingles(s, d, col("source") === "src0")
-        .select(col("sh")).distinct()
-      val contaminated = splitShingles(s, d, trainPred)
-        .join(evalSh, "sh").select(col("doc_id")).distinct()
       // r16: AQE coalesces the anti-join output to one partition (a few
       // MB of text), which would serialize the K-window explode below —
       // bytes-based coalescing is blind to downstream per-row compute.
       // The scale-adaptive spread is a no-op on real layouts.
-      val clean = Tables.parallelized(
-        deduped.join(contaminated, Seq("doc_id"), "left_anti"))
+      val clean = Tables.parallelized(cleanTrain(s, d))
         .select(col("doc_id"), TextOps.wsTokens(col("text")).as("w"))
       val spans = islandSpans(clean, hashed = false, carry = Seq.empty,
         dupSparse = true)
@@ -1594,9 +1471,8 @@ object Dedup {
           size(col("ctoks")).cast("bigint").as("kept"),
           array_join(col("ctoks"), " ").as("ctext"))
       cut
-        .withColumn("h", md5(col("doc_id").cast("string").cast("binary")))
-        .withColumn("shard",
-          expr("CAST(instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS INT)"))
+        .withColumn("h", TextOps.docHash)
+        .withColumn("shard", TextOps.shardKey)
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("kept")).cast("bigint").as("n_tokens"),
@@ -1609,6 +1485,25 @@ object Dedup {
     }
   )
 
+  /** The training-write prefix of p2 and p6: train-split docs with ≥ 5
+    * whitespace tokens (the gate), first doc per exact text (the dedup),
+    * minus every doc sharing ONE 3-gram shingle with the eval split —
+    * d8's set-reduced membership join (shingle universe, not doc pairs)
+    * feeding a LEFT ANTI join on doc_id (the decontamination). */
+  private def cleanTrain(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val deduped = Tables.validDocuments(s, d)
+      .filter(TrainGate)
+      .withColumn("rn",
+        row_number().over(Window.partitionBy(col("text")).orderBy(col("doc_id"))))
+      .filter(col("rn") === 1)
+    val evalSh = shingleKeys[Long](s, d, "doc_id", EvalSplit)
+      .select(col("sh")).distinct()
+    val contaminated = shingleKeys[Long](s, d, "doc_id", TrainSplit)
+      .join(evalSh, "sh").select(col("doc_id")).distinct()
+    deduped.join(contaminated, Seq("doc_id"), "left_anti")
+  }
+
   /** d20's window length in tokens. A COMPILE-TIME constant shared by the
     * Spark pipeline and the DuckDB oracle (`D20_SQL` interpolates it), not
     * a conf knob: r15's `graft.dedup.substrK` let a user set K while the
@@ -1616,13 +1511,6 @@ object Dedup {
     * (ADVICE r15). One source of truth for both sides closes that. */
   private[graft] val SubstrK = 10
 
-  /** The d20 island kernel over an arbitrary tokenized population:
-    * K-window keys → global count ≥ 2 → join back → gaps-and-islands on
-    * window starts. Input `toks` must carry (doc_id, w) plus any `carry`
-    * columns to thread through (they ride the window pipeline, never a
-    * join). Returns one row per maximal island: (doc_id, carry…, sp, ep)
-    * where [sp, ep+K−1] is the covered TOKEN range. Shared by
-    * d20/d20_scale (corpus-wide rollup) and p6 (the actual cut). */
   /** The K-window key stream over a tokenized population: one row per
     * (doc_id, carry…, pos, wkey). `hashed` picks the key form (exact
     * window text = oracle-able, xxhash64 of the token slice = the
@@ -1658,6 +1546,13 @@ object Dedup {
       .select(col("doc_id") +: cc :+ col("sp") :+ col("ep"): _*)
   }
 
+  /** The d20 island kernel over an arbitrary tokenized population:
+    * K-window keys → global count ≥ 2 → join back → gaps-and-islands on
+    * window starts. Input `toks` must carry (doc_id, w) plus any `carry`
+    * columns to thread through (they ride the window pipeline, never a
+    * join). Returns one row per maximal island: (doc_id, carry…, sp, ep)
+    * where [sp, ep+K−1] is the covered TOKEN range. Shared by
+    * d20/d20_scale (corpus-wide rollup) and p6 (the actual cut). */
   private def islandSpans(toks0: DataFrame, hashed: Boolean,
       carry: Seq[String], dupSparse: Boolean = false): DataFrame = {
     val wins = windowKeys(toks0, hashed, carry)
@@ -1704,40 +1599,36 @@ object Dedup {
     * CONTAMINATED train doc (doc_id, n_tokens, n_spans,
     * contaminated_tokens, contam_ppm), doc_id-ordered. */
   private def substrDecontam(s: SparkSession, d: String, hashed: Boolean): DataFrame = {
-    val K = SubstrK
-    val docs = Tables.parallelized(Tables.validDocuments(s, d))
-      .select(col("doc_id"), col("source"), TextOps.wsTokens(col("text")).as("w"))
-      .withColumn("n_tokens", size(col("w")).cast("bigint"))
-    val evalW = windowKeys(docs.filter(col("source") === "src0"), hashed, Seq.empty)
+    val docs = tokenFrame(s, d, col("source"))
+    val evalW = windowKeys(docs.filter(EvalSplit), hashed, Seq.empty)
       .select(col("wkey")).distinct()
-    val trainW = windowKeys(
-      docs.filter(col("source").isNotNull && col("source") =!= "src0"),
-      hashed, Seq("n_tokens"))
-    mergeIslands(trainW.join(evalW, "wkey"), Seq("n_tokens"))
-      .withColumn("span_tokens", col("ep") - col("sp") + K)
-      .groupBy(col("doc_id"), col("n_tokens"))
-      .agg(count(lit(1)).cast("bigint").as("n_spans"),
-        sum(col("span_tokens")).cast("bigint").as("contaminated_tokens"))
-      .withColumn("contam_ppm", expr("contaminated_tokens * 1000000 DIV n_tokens"))
-      .orderBy(col("doc_id"))
+    val trainW = windowKeys(docs.filter(TrainSplit), hashed, Seq("n_tokens"))
+    spanRollup(mergeIslands(trainW.join(evalW, "wkey"), Seq("n_tokens")),
+      "contaminated_tokens", "contam_ppm")
   }
 
   /** Shared d20 pipeline — see the map entry. `hashed` selects the window
     * key: exact text (oracle-able) vs xxhash64 of the token slice (scale).
     * K = [[SubstrK]] on both the Spark and oracle sides. */
-  private def substringSpans(s: SparkSession, d: String, hashed: Boolean): DataFrame = {
-    val K = SubstrK
-    val toks = Tables.parallelized(Tables.validDocuments(s, d))
-      .select(col("doc_id"), TextOps.wsTokens(col("text")).as("w"))
+  private def substringSpans(s: SparkSession, d: String, hashed: Boolean): DataFrame =
+    spanRollup(islandSpans(tokenFrame(s, d), hashed, Seq("n_tokens")), "dup_tokens", "dup_ppm")
+
+  /** (doc_id, cols…, w, n_tokens): the whitespace-token frame of d20/d21. */
+  private def tokenFrame(s: SparkSession, d: String, cols: Column*): DataFrame =
+    Tables.parallelized(Tables.validDocuments(s, d))
+      .select(col("doc_id") +: cols :+ TextOps.wsTokens(col("text")).as("w"): _*)
       .withColumn("n_tokens", size(col("w")).cast("bigint"))
-    islandSpans(toks, hashed, Seq("n_tokens"))
-      .withColumn("span_tokens", col("ep") - col("sp") + K)
+
+  /** d20/d21's per-doc rollup of maximal spans (doc_id, n_tokens, sp, ep):
+    * span count, covered tokens (`tokens`) and their integer ppm share. */
+  private def spanRollup(spans: DataFrame, tokens: String, ppm: String): DataFrame =
+    spans
+      .withColumn("span_tokens", col("ep") - col("sp") + SubstrK)
       .groupBy(col("doc_id"), col("n_tokens"))
       .agg(count(lit(1)).cast("bigint").as("n_spans"),
-        sum(col("span_tokens")).cast("bigint").as("dup_tokens"))
-      .withColumn("dup_ppm", expr("dup_tokens * 1000000 DIV n_tokens"))
+        sum(col("span_tokens")).cast("bigint").as(tokens))
+      .withColumn(ppm, expr(s"$tokens * 1000000 DIV n_tokens"))
       .orderBy(col("doc_id"))
-  }
 
   /** d9's presentation layer over the converged (doc_id, cluster_id)
     * fixpoint — cluster size window + representative flag. Shared by

@@ -132,14 +132,14 @@ object Similarity {
 
   import graft.functions.VecFunctions.{ivec_dot, vec_dot}
 
-  // All s-family ops consume the validated embedding domain (Tables
+  // All s-family ops (and d6/d7/d15) consume the validated embedding domain (Tables
   // .validEmbeddings: key+label present, declared dim, finite elements,
   // nonzero norm — mirrored verbatim in every oracle below). Validity
   // guarantees sq > 0, so every PAIRWISE cosine denominator is nonzero;
   // only centroid-derived denominators can still vanish (a label's
   // component sums can cancel to the zero vector) and are null-guarded
   // where they occur (s5/s6).
-  private def normed(s: SparkSession, d: String): DataFrame =
+  private[queries] def normed(s: SparkSession, d: String): DataFrame =
     Tables.parallelized(Tables.validEmbeddings(s, d)).select(col("vec_id"), col("label"), col("embedding"),
       vec_dot(col("embedding"), col("embedding")).as("sq"))
 

@@ -51,16 +51,26 @@ object TextOps {
     when(trim(c) === "", array().cast("array<string>"))
       .otherwise(split(trim(c), "\\s+"))
 
+  /** md5 of the decimal doc_id: the hash a manifest shards on (`h`). */
+  private[queries] val docHash: Column = md5(col("doc_id").cast("string").cast("binary"))
+
+  /** The manifest shard of a doc, its md5-nibble: the first hex digit of
+    * `h` ([[docHash]]) — t28's geometry, shared by t28, p2, p4 and p6. */
+  private[queries] val shardKey: Column =
+    expr("CAST(instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS INT)")
+
+  /** (doc_id, n_chars, n_tokens, h, shard) per document: the rows every
+    * shard manifest (t28, p2, p4) aggregates. */
+  private[queries] def shardRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("n_chars"),
+        size(wsTokens(col("text"))).cast("bigint").as("n_tokens"), docHash.as("h"))
+      .withColumn("shard", shardKey)
+
   /** t28's per-shard summary over `pred`-selected docs, endpoints carried
     * as mergeable "h:zero-padded-id" tags — shared by the full plan, its
     * split-merge proof, and any incremental caller. */
   private def shardAgg(s: SparkSession, d: String, pred: Column): org.apache.spark.sql.DataFrame =
-    Tables.validDocuments(s, d).filter(pred)
-      .select(col("doc_id"), col("n_chars"),
-        size(wsTokens(col("text"))).cast("bigint").as("n_tokens"),
-        md5(col("doc_id").cast("string").cast("binary")).as("h"))
-      .withColumn("shard",
-        expr("CAST(instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS INT)"))
+    shardRows(Tables.validDocuments(s, d).filter(pred))
       // 19 = max digits of a non-negative Long: lpad TRUNCATES longer
       // inputs, so a narrower pad would silently corrupt the endpoint tags
       // (and break the (h, doc_id) ⇔ string-order isomorphism the

@@ -25,7 +25,7 @@ class DedupSpec extends SparkTestBase {
     val md = java.security.MessageDigest.getInstance("MD5")
     def sig(text: String): Long = {
       val counts = new Array[Int](64)
-      graft.queries.Dedup.shinglesForTest(text).foreach { sh =>
+      graft.queries.Dedup.shinglesOf(text).foreach { sh =>
         val dig = md.digest(sh.getBytes("UTF-8"))
         for (j <- 0 until 16; t <- 0 until 4) {
           val b = dig(j >> 1) & 0xff
@@ -44,6 +44,31 @@ class DedupSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(expected.nonEmpty, "spec corpus must contain at least one near-dup pair")
     assert(got == expected, s"banded pairs $got != brute-force pairs $expected")
+  }
+
+  // The rows-only dedup outputs (their buckets are hash-defined, so no
+  // oracle hashes them), pinned to the bit at sf0.001: row count and the
+  // md5 of the sorted rows, each double rendered as its raw bits.
+  private val RowPins = Seq(
+    "d4_dedup_simhash" -> (17L, "37ae9c4c51597cf54185e746f2370f7f"),
+    "d7_embedding_neardup_lsh" -> (75L, "57f8bc72d9054688cfd385bdf4dcadc3"),
+    "bandRows" -> (4000L, "d8f1c456d0d4113642c0e5a3529fe078"))
+
+  test("rows-only dedup outputs match their pinned row count and md5") {
+    def render(v: Any): String = v match {
+      case x: Double => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(x))
+      case x => String.valueOf(x)
+    }
+    val got = RowPins.map { case (name, _) =>
+      val df =
+        if (name == "bandRows") graft.queries.Dedup.bandRows(spark, sf)
+        else graft.queries.Dedup.queries(name)(spark, sf)
+      val rows = df.collect().map(_.toSeq.map(render).mkString("|")).sorted
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+        .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+      name -> (rows.length.toLong, md5)
+    }
+    assert(got == RowPins, got.mkString("\n"))
   }
 
   test("d1 exact dedup partitions the corpus") {
@@ -113,7 +138,7 @@ class DedupSpec extends SparkTestBase {
 
   test("d7 geometry derives from the threshold; defaults reproduce the r10 shape") {
     import graft.queries.Dedup
-    // The default conf (θ=0.3, 16 tables, target 0.85) must reproduce
+    // The d7 query's geometry (θ=0.3, 16 tables, target 0.85) must reproduce
     // r10's fixed 4-bit geometry bit-for-bit — same bits, and the plane
     // pool's first 64 rows are the r10 planes (same seed, same fill order).
     assert(Dedup.d7Geometry(0.3, 16, 0.85) == 4, "default geometry drifted from r10's 4 bits")
@@ -367,35 +392,6 @@ class DedupSpec extends SparkTestBase {
       assert(floor >= tgt, s"($th,$tgt) -> ($b,$r) floor $floor below target")
       assert(b * r <= 64, s"($th,$tgt) -> ($b,$r) exceeds the signature budget")
     }
-  }
-
-  test("materialized shingle table (graft.dedup.shingleDir) changes no bits") {
-    // The shared-shingle prep (r12): with the conf on, the d-family reads
-    // a provisioned (doc_id, shingles) parquet instead of re-tokenizing
-    // text per query. Results must be IDENTICAL — stored sets are the
-    // same shinglesOf output, and bandSignature is a pure function of
-    // the set.
-    val direct5 = graft.queries.Dedup.queries("d5_ngram_jaccard")(spark, sf)
-      .collect().map(_.toString).sorted
-    val direct3 = graft.queries.Dedup.queries("d3_dedup_minhash")(spark, sf)
-      .collect().map(_.toString).sorted
-    val direct10 = graft.queries.Dedup.queries("d10_incremental_dedup")(spark, sf)
-      .collect().map(_.toString).sorted
-    spark.conf.set("graft.dedup.shingleDir", "auto")
-    try {
-      for ((name, want) <- Seq("d5_ngram_jaccard" -> direct5,
-          "d3_dedup_minhash" -> direct3, "d10_incremental_dedup" -> direct10)) {
-        val got = graft.queries.Dedup.queries(name)(spark, sf)
-          .collect().map(_.toString).sorted
-        assert(got.sameElements(want), s"$name diverges under shingleDir=auto")
-      }
-      // and the table actually exists on disk (provision-on-first-use)
-      val tag = graft.Tables.corpusTag(sf)
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        s"graft_shingles_$tag")
-      assert(new java.io.File(loc, "_SUCCESS").exists(), s"no shingle table at $loc")
-    } finally spark.conf.unset("graft.dedup.shingleDir")
   }
 
   test("d9_scale/d17_scale equal their exact twins at verify SF") {

@@ -203,7 +203,7 @@ class SketchSpec extends SparkTestBase {
       import spark.implicits._
       Tables.parallelized(Tables.validDocuments(spark, sf))
         .select(col("doc_id"), col("text")).as[(Long, String)]
-        .flatMap { case (_, t) => graft.queries.Dedup.shinglesForTest(t) }
+        .flatMap { case (_, t) => graft.queries.Dedup.shinglesOf(t) }
         .distinct().count()
     }
     assert(nDistinct < ngramCap, s"t8_scale would evict: $nDistinct >= $ngramCap")
@@ -212,7 +212,7 @@ class SketchSpec extends SparkTestBase {
       import spark.implicits._
       Tables.parallelized(Tables.validDocuments(spark, sf))
         .select(col("source"), col("text")).as[(String, String)]
-        .flatMap { case (s, t) => graft.queries.Dedup.shinglesForTest(t).map((s, _)) }
+        .flatMap { case (s, t) => graft.queries.Dedup.shinglesOf(t).map((s, _)) }
         .distinct().groupBy("_1").count()
         .agg(max(col("count"))).collect()(0).getLong(0)
     }
